@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: times every declared query at
   * `SPARK_GRAFT_SF_DIR` (default sf0.1) and prints ONE JSON line.
   *
@@ -75,14 +73,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     def materialize(name: String): Double = {
       val dt =
@@ -133,11 +124,15 @@ object Bench {
       val ps = passes(n).mkString("[", ",", "]")
       s""""$n":{"entry":$e,"band":${band(e)},"passes":$ps}"""
     }.mkString("{", ",", "}")
+    // a query that threw every time is timed -1.0 and left out of
+    // `total`; `failed` names it so the omission can't go unnoticed
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failedJson = results.collect { case (n, v) if v < 0 => s""""$n"""" }
+      .mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""sf":"$sfDir","retried":$retriedJson,""" +
-        s""""load_suspect":$suspectJson}"""
+        s""""load_suspect":$suspectJson,"failed":$failedJson}"""
     // Default output path is stamped with the core count and wall-clock
     // so successive runs (the driver benches at two core counts) can't
     // overwrite each other's full per-query map — round 12 lost the

@@ -60,16 +60,6 @@ object PlanLedger {
     }.mkString(" ")
   }
 
-  /** Build the session the ledger is DEFINED against. The spec uses the
-    * same builder so ledger and check can't drift on config. */
-  def session(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   def fingerprintOf(s: SparkSession, name: String, sfDir: String): String =
     try fingerprint(
       SparkEntry.queries(name)(s, sfDir).queryExecution.executedPlan)
@@ -82,8 +72,8 @@ object PlanLedger {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), aqe = false)
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val rows = names.map { n =>

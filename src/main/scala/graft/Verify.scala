@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,9 @@ object Verify {
     val outDir = args(1)
     val only = args.drop(2).toSet // optional name filter, local iteration
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     new java.io.File(outDir).mkdirs()
+    val failed = collection.mutable.TreeMap[String, String]()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -24,6 +18,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed(name) = String.valueOf(e)
       }
       // queries that cache shared subframes (LSH banded, prepareCorpus
       // exact-dedup) leave those plans pinned; across ~100 queries the
@@ -64,6 +59,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(withProlog(v))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // name → error of every query that threw (empty when none did); a
+    // file, not a directory, so tools/check.py's parquet walk skips it
+    Files.writeString(Paths.get(s"$outDir/verify_failed.json"),
+      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+        .mkString("{", ",", "}"))
     spark.stop()
   }
 }

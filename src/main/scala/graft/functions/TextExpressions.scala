@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.PortableHash.Mod
@@ -391,12 +391,19 @@ case class GramStrings(child: Expression, n: Int)
   * buffers them. */
 case class AdjacentPairs(child: Expression) extends UnaryExpression {
 
+  // a null token yields a null pair field, as `ws[i]` does in the lambda
+  // form; the fields are nullable exactly when the input's elements are
+  private def elemNullable: Boolean = child.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  }
+
   override def dataType: DataType = ArrayType(
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("w1", StringType,
-        nullable = false),
+        nullable = elemNullable),
       org.apache.spark.sql.types.StructField("w2", StringType,
-        nullable = false))),
+        nullable = elemNullable))),
     containsNull = false)
 
   override def checkInputDataTypes()
@@ -417,11 +424,13 @@ case class AdjacentPairs(child: Expression) extends UnaryExpression {
       new org.apache.spark.sql.catalyst.util.GenericArrayData(
         Array.empty[Any])
     } else {
+      def tok(i: Int): UTF8String =
+        if (arr.isNullAt(i)) null else arr.getUTF8String(i).clone()
       val out = new Array[Any](m)
-      var prev = arr.getUTF8String(0).clone()
+      var prev = tok(0)
       var i = 0
       while (i < m) {
-        val next = arr.getUTF8String(i + 1).clone()
+        val next = tok(i + 1)
         out(i) =
           new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
             Array[Any](prev, next))
@@ -445,10 +454,10 @@ case class AdjacentPairs(child: Expression) extends UnaryExpression {
          |if ($m < 0) $m = 0;
          |Object[] $out = new Object[$m];
          |org.apache.spark.unsafe.types.UTF8String $prev =
-         |  $m > 0 ? $arr.getUTF8String(0).clone() : null;
+         |  $m > 0 && !$arr.isNullAt(0) ? $arr.getUTF8String(0).clone() : null;
          |for (int $i = 0; $i < $m; $i++) {
          |  org.apache.spark.unsafe.types.UTF8String $next =
-         |    $arr.getUTF8String($i + 1).clone();
+         |    $arr.isNullAt($i + 1) ? null : $arr.getUTF8String($i + 1).clone();
          |  $out[$i] =
          |    new org.apache.spark.sql.catalyst.expressions
          |      .GenericInternalRow(new Object[] { $prev, $next });
@@ -648,62 +657,63 @@ case class DamerauLevenshtein(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The engine's native SQL functions: ONE `(name, builder)` table that
+  * feeds both [[registerAll]] (per-session temp functions, called by
+  * `SparkEntry.queries` before every query body) and
+  * `graft.GraftExtensions` (session extensions for SQL users). */
 object GraftFunctions {
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProductD(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "centroid_argmax", exprs => CentroidArgMax(
-        exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash32", exprs => SimHash32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash16", exprs => MinHashSig(exprs.head, 16), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_k", exprs => MinHashSig(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => ShingleHashes(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "gram_strings", exprs => GramStrings(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "adjacent_pairs", exprs => AdjacentPairs(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "winnow_keys", exprs => WinnowKeys(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sum_squares", exprs => SumOfSquaresLong(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "gram_moments", exprs => GramMomentsAgg(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "damerau_lev", exprs => DamerauLevenshtein(exprs(0), exprs(1)),
-      "built-in")
+
+  /** A builder's constant argument: a foldable, non-null integral value,
+    * read while the function is resolved. Anything else fails analysis
+    * with NON_FOLDABLE_ARGUMENT instead of surfacing as a
+    * ClassCastException or NPE from `eval()`. */
+  private def constArg(fn: String, param: String, e: Expression): Long = {
+    val v = e.dataType match {
+      case ByteType | ShortType | IntegerType | LongType if e.foldable =>
+        e.eval()
+      case _ => null
+    }
+    if (v == null) throw new AnalysisException("NON_FOLDABLE_ARGUMENT",
+      Map("funcName" -> fn, "paramName" -> param, "paramType" -> "INTEGRAL"))
+    v.asInstanceOf[Number].longValue()
+  }
+
+  val table: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "vec_dot" -> (e => DotProductD(e(0), e(1))),
+    "centroid_argmax" -> (e => CentroidArgMax(e(0), e(1), e(2))),
+    "poly_hash" -> (e => PolyHash(e.head)),
+    "simhash32" -> (e => SimHash32(e.head)),
+    "minhash16" -> (e => MinHashSig(e.head, 16)),
+    "minhash_k" -> (e =>
+      MinHashSig(e(0), constArg("minhash_k", "k", e(1)).toInt)),
+    "shingle_hashes" -> (e =>
+      ShingleHashes(e(0), constArg("shingle_hashes", "n", e(1)).toInt)),
+    "gram_strings" -> (e =>
+      GramStrings(e(0), constArg("gram_strings", "n", e(1)).toInt)),
+    "adjacent_pairs" -> (e => AdjacentPairs(e.head)),
+    "winnow_keys" -> (e => WinnowKeys(e(0),
+      constArg("winnow_keys", "w", e(1)).toInt,
+      constArg("winnow_keys", "posBase", e(2)))),
+    "sum_squares" -> (e => SumOfSquaresLong(e.head)),
+    "gram_moments" -> (e =>
+      GramMomentsAgg(e(0), constArg("gram_moments", "d", e(1)).toInt)),
+    "damerau_lev" -> (e => DamerauLevenshtein(e(0), e(1))),
     // Spark's own runtime-filter bloom expressions (public Catalyst
     // classes, not in the SQL registry): bloom_agg(col, est_items,
     // num_bits) builds the filter, bloom_might_contain(bloom, col)
     // probes it. The probe side requires a foldable/scalar-subquery
     // bloom argument — exactly how Spark's InjectRuntimeFilter uses it.
-    reg.createOrReplaceTempFunction(
-      "bloom_agg", exprs =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain", exprs =>
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
+    "bloom_agg" -> (e =>
+      new org.apache.spark.sql.catalyst.expressions.aggregate
+        .BloomFilterAggregate(e(0), e(1), e(2))),
+    "bloom_might_contain" -> (e =>
+      org.apache.spark.sql.catalyst.expressions
+        .BloomFilterMightContain(e(0), e(1))))
+
+  def registerAll(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    table.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -196,15 +196,8 @@ case class CentroidArgMax(
 
 object VectorFunctions {
 
-  /** Register `vec_dot` in a session's function registry (idempotent).
-    * Sessions built with [[graft.GraftExtensions]] get it injected at
-    * construction instead. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProductD(exprs(0), exprs(1)), "built-in")
-
   /** Column API: dot product of two array<double> columns (requires
-    * register() or GraftExtensions on the session). */
+    * `GraftFunctions.registerAll` or GraftExtensions on the session). */
   def vec_dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.sources.Tables
 
 /** Round-7 analytics surface: statistical profiling (correlation matrix),
@@ -748,7 +749,6 @@ object Analytics {
     * mutuality test as an equi-join of the K-bounded directed frame
     * against itself. */
   def q191ReciprocalNn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     import graft.functions.VectorFunctions.vec_dot
     val base = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
@@ -963,7 +963,6 @@ object Analytics {
     * equi-join on signature is the blocking, verification is one
     * codegen'd expression per candidate. */
   def q356TypoJoinDl(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val w = t(s, dir, "supplier").select(col("s_name").as("w")).distinct()
     val sigs = w.select(col("w"), explode(expr(
       "concat(array(w), transform(sequence(1, length(w)), " +
@@ -5703,178 +5702,94 @@ object Analytics {
             AS churned
         FROM flows QUALIFY lag(dau) OVER (ORDER BY day) IS NOT NULL"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q399_viterbi" -> (q399Viterbi _),
-    "q401_slope_one" -> (q401SlopeOne _),
-    "q404_mase" -> (q404Mase _),
-    "q406_dtw" -> (q406Dtw _),
-    "q407_markov_entropy" -> (q407MarkovEntropy _),
-    "q413_lis" -> (q413Lis _),
-    "q414_rescaled_range" -> (q414RescaledRange _),
-    "q368_isotonic_calibration" -> (q368IsotonicCalibration _),
-    "q395_ewma" -> (q395Ewma _),
-    "q396_herfindahl" -> (q396Herfindahl _),
-    "q397_adamic_adar" -> (q397AdamicAdar _),
-    "q436_rich_club" -> (q436RichClub _),
-    "q445_granger_lite" -> (q445GrangerLite _),
-    "q459_propensity_balance" -> (q459PropensityBalance _),
-    "q469_churn_steady_state" -> (q469ChurnSteadyState _),
-    "q481_customer_ltv" -> (q481CustomerLtv _),
-    "q493_growth_accounting" -> (q493GrowthAccounting _),
-    "q471_decile_lift" -> (q471DecileLift _),
-    "q447_spc_control" -> (q447SpcControl _),
-    "q437_katz_index" -> (q437KatzIndex _),
-    "q441_epi_ratios" -> (q441EpiRatios _),
-    "q382_brier_ece" -> (q382BrierEce _),
-    "q386_sprt_monitor" -> (q386SprtMonitor _),
-    "q387_mcc_threshold" -> (q387MccThreshold _),
-    "q384_hist_emd" -> (q384HistEmd _),
-    "q325_cohort_retention" -> (q325CohortRetention _),
-    "q298_weekday_revenue" -> (q298WeekdayRevenue _),
-    "q299_quantity_discount" -> (q299QuantityDiscount _),
-    "q297_max_drawdown" -> (q297MaxDrawdown _),
-    "q286_rfm_features" -> (q286RfmFeatures _),
-    "q287_f1_optimizer" -> (q287F1Optimizer _),
-    "q281_bootstrap_diff" -> (q281BootstrapDiff _),
-    "q277_expected_shortfall" -> (q277ExpectedShortfall _),
-    "q279_pr_curve" -> (q279PrCurve _),
-    "q268_mde_power" -> (q268MdePower _),
-    "q265_seasonal_residual" -> (q265SeasonalResidual _),
-    "q266_welch_t" -> (q266WelchT _),
-    "q264_kendall_tau" -> (q264KendallTau _),
-    "q259_cuped" -> (q259Cuped _),
-    "q256_theil_sen" -> (q256TheilSen _),
-    "q258_simpson_audit" -> (q258SimpsonAudit _),
-    "q255_loo_encoding" -> (q255LooEncoding _),
-    "q252_holt_smoothing" -> (q252HoltSmoothing _),
-    "q319_holt_backtest" -> (q319HoltBacktest _),
-    "q247_chi2_independence" -> (q247Chi2Independence _),
-    "q248_benford" -> (q248Benford _),
-    "q242_wilson_rank" -> (q242WilsonRank _),
-    "q240_bootstrap_ci" -> (q240BootstrapCi _),
+  val registry: Seq[Q] = Seq(
+    Q("q399_viterbi", q399Viterbi, q399OracleSql),
+    Q("q401_slope_one", q401SlopeOne, q401OracleSql),
+    Q("q404_mase", q404Mase, q404OracleSql),
+    Q("q406_dtw", q406Dtw, q406OracleSql),
+    Q("q407_markov_entropy", q407MarkovEntropy, q407OracleSql),
+    Q("q413_lis", q413Lis, q413OracleSql),
+    Q("q414_rescaled_range", q414RescaledRange, q414OracleSql),
+    Q("q368_isotonic_calibration", q368IsotonicCalibration, q368OracleSql),
+    Q("q395_ewma", q395Ewma, q395OracleSql),
+    Q("q396_herfindahl", q396Herfindahl, q396OracleSql),
+    Q("q397_adamic_adar", q397AdamicAdar, q397OracleSql),
+    Q("q436_rich_club", q436RichClub, q436OracleSql),
+    Q("q445_granger_lite", q445GrangerLite, q445OracleSql),
+    Q("q459_propensity_balance", q459PropensityBalance, q459OracleSql),
+    Q("q469_churn_steady_state", q469ChurnSteadyState, q469OracleSql),
+    Q("q481_customer_ltv", q481CustomerLtv, q481OracleSql),
+    Q("q493_growth_accounting", q493GrowthAccounting, q493OracleSql),
+    Q("q471_decile_lift", q471DecileLift, q471OracleSql),
+    Q("q447_spc_control", q447SpcControl, q447OracleSql),
+    Q("q437_katz_index", q437KatzIndex, q437OracleSql),
+    Q("q441_epi_ratios", q441EpiRatios, q441OracleSql),
+    Q("q382_brier_ece", q382BrierEce, q382OracleSql),
+    Q("q386_sprt_monitor", q386SprtMonitor, q386OracleSql),
+    Q("q387_mcc_threshold", q387MccThreshold, q387OracleSql),
+    Q("q384_hist_emd", q384HistEmd, q384OracleSql),
+    Q("q325_cohort_retention", q325CohortRetention, q325OracleSql),
+    Q("q298_weekday_revenue", q298WeekdayRevenue, q298OracleSql),
+    Q("q299_quantity_discount", q299QuantityDiscount, q299OracleSql),
+    Q("q297_max_drawdown", q297MaxDrawdown, q297OracleSql),
+    Q("q286_rfm_features", q286RfmFeatures, q286OracleSql),
+    Q("q287_f1_optimizer", q287F1Optimizer, q287OracleSql),
+    Q("q281_bootstrap_diff", q281BootstrapDiff, q281OracleSql),
+    Q("q277_expected_shortfall", q277ExpectedShortfall, q277OracleSql),
+    Q("q279_pr_curve", q279PrCurve, q279OracleSql),
+    Q("q268_mde_power", q268MdePower, q268OracleSql),
+    Q("q265_seasonal_residual", q265SeasonalResidual, q265OracleSql),
+    Q("q266_welch_t", q266WelchT, q266OracleSql),
+    Q("q264_kendall_tau", q264KendallTau, q264OracleSql),
+    Q("q259_cuped", q259Cuped, q259OracleSql),
+    Q("q256_theil_sen", q256TheilSen, q256OracleSql),
+    Q("q258_simpson_audit", q258SimpsonAudit, q258OracleSql),
+    Q("q255_loo_encoding", q255LooEncoding, q255OracleSql),
+    Q("q252_holt_smoothing", q252HoltSmoothing, q252OracleSql),
+    Q("q319_holt_backtest", q319HoltBacktest, q319OracleSql),
+    Q("q247_chi2_independence", q247Chi2Independence, q247OracleSql),
+    Q("q248_benford", q248Benford, q248OracleSql),
+    Q("q242_wilson_rank", q242WilsonRank, q242OracleSql),
+    Q("q240_bootstrap_ci", q240BootstrapCi, q240OracleSql),
     // differential pins the fixed 2-char suffix key explicitly (the
     // no-arg operator applies the q230SuffixLen deployment rule;
     // lengthened keys change the measured completeness, the operator's
     // own subject, so the pin is a test seed)
-    "q230_blocking_eval" -> ((s: SparkSession, d: String) =>
+    Q("q230_blocking_eval", (s: SparkSession, d: String) =>
       q230BlockingEval(s, d,
         t(s, d, "supplier").select(col("s_name").as("w")).distinct(),
-        2)),
-    "q210_decision_stump" -> (q210DecisionStump _),
-    "q211_rolling_wau" -> (q211RollingWau _),
-    "q212_rare_collapse" -> (q212RareCollapse _),
-    "q208_srm_check" -> (q208SrmCheck _),
-    "q209_stickiness" -> (q209Stickiness _),
-    "q205_modularity" -> (q205Modularity _),
-    "q206_conductance" -> (q206Conductance _),
-    "q207_assortativity" -> (q207Assortativity _),
-    "q202_hist_intersection" -> (q202HistIntersection _),
-    "q203_target_encoding" -> (q203TargetEncoding _),
-    "q204_negative_sampling" -> (q204NegativeSampling _),
-    "q200_conversion_curve" -> (q200ConversionCurve _),
-    "q201_lorenz_curve" -> (q201LorenzCurve _),
-    "q195_calibration_bins" -> (q195CalibrationBins _),
-    "q196_seasonal_profile" -> (q196SeasonalProfile _),
-    "q197_session_paths" -> (q197SessionPaths _),
-    "q198_changepoint" -> (q198Changepoint _),
-    "q199_edge_jaccard" -> (q199EdgeJaccard _),
-    "q191_reciprocal_nn" -> (q191ReciprocalNn _),
-    "q192_decayed_engagement" -> (q192DecayedEngagement _),
-    "q193_frequent_triples" -> (q193FrequentTriples _),
-    "q194_typo_join" -> (q194TypoJoin _),
-    "q356_typo_join_dl" -> (q356TypoJoinDl _),
-    "q180_corr_matrix" -> (q180CorrMatrix _),
-    "q181_kmv_sketch" -> (q181KmvSketch _),
-    "q182_seq_pattern" -> (q182SeqPattern _),
-    "q183_link_prediction" -> (q183LinkPrediction _),
-    "q184_curriculum_order" -> (q184CurriculumOrder _),
-    "q185_grid_join" -> (q185GridJoin _),
-    "q186_dbscan_labels" -> (q186DbscanLabels _),
-    "q187_auc_exact" -> (q187AucExact _),
-    "q189_kmv_setops" -> (q189KmvSetOps _),
-    "q190_anova_f" -> (q190AnovaF _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q368_isotonic_calibration" -> q368OracleSql,
-    "q399_viterbi" -> q399OracleSql,
-    "q401_slope_one" -> q401OracleSql,
-    "q404_mase" -> q404OracleSql,
-    "q406_dtw" -> q406OracleSql,
-    "q407_markov_entropy" -> q407OracleSql,
-    "q413_lis" -> q413OracleSql,
-    "q414_rescaled_range" -> q414OracleSql,
-    "q395_ewma" -> q395OracleSql,
-    "q396_herfindahl" -> q396OracleSql,
-    "q397_adamic_adar" -> q397OracleSql,
-    "q436_rich_club" -> q436OracleSql,
-    "q445_granger_lite" -> q445OracleSql,
-    "q459_propensity_balance" -> q459OracleSql,
-    "q469_churn_steady_state" -> q469OracleSql,
-    "q481_customer_ltv" -> q481OracleSql,
-    "q493_growth_accounting" -> q493OracleSql,
-    "q471_decile_lift" -> q471OracleSql,
-    "q447_spc_control" -> q447OracleSql,
-    "q437_katz_index" -> q437OracleSql,
-    "q441_epi_ratios" -> q441OracleSql,
-    "q382_brier_ece" -> q382OracleSql,
-    "q386_sprt_monitor" -> q386OracleSql,
-    "q387_mcc_threshold" -> q387OracleSql,
-    "q384_hist_emd" -> q384OracleSql,
-    "q325_cohort_retention" -> q325OracleSql,
-    "q298_weekday_revenue" -> q298OracleSql,
-    "q299_quantity_discount" -> q299OracleSql,
-    "q297_max_drawdown" -> q297OracleSql,
-    "q286_rfm_features" -> q286OracleSql,
-    "q287_f1_optimizer" -> q287OracleSql,
-    "q281_bootstrap_diff" -> q281OracleSql,
-    "q277_expected_shortfall" -> q277OracleSql,
-    "q279_pr_curve" -> q279OracleSql,
-    "q268_mde_power" -> q268OracleSql,
-    "q265_seasonal_residual" -> q265OracleSql,
-    "q266_welch_t" -> q266OracleSql,
-    "q264_kendall_tau" -> q264OracleSql,
-    "q259_cuped" -> q259OracleSql,
-    "q256_theil_sen" -> q256OracleSql,
-    "q258_simpson_audit" -> q258OracleSql,
-    "q255_loo_encoding" -> q255OracleSql,
-    "q252_holt_smoothing" -> q252OracleSql,
-    "q319_holt_backtest" -> q319OracleSql,
-    "q247_chi2_independence" -> q247OracleSql,
-    "q248_benford" -> q248OracleSql,
-    "q242_wilson_rank" -> q242OracleSql,
-    "q240_bootstrap_ci" -> q240OracleSql,
-    "q230_blocking_eval" -> q230OracleSql,
-    "q210_decision_stump" -> q210OracleSql,
-    "q211_rolling_wau" -> q211OracleSql,
-    "q212_rare_collapse" -> q212OracleSql,
-    "q208_srm_check" -> q208OracleSql,
-    "q209_stickiness" -> q209OracleSql,
-    "q205_modularity" -> q205OracleSql,
-    "q206_conductance" -> q206OracleSql,
-    "q207_assortativity" -> q207OracleSql,
-    "q202_hist_intersection" -> q202OracleSql,
-    "q203_target_encoding" -> q203OracleSql,
-    "q204_negative_sampling" -> q204OracleSql,
-    "q200_conversion_curve" -> q200OracleSql,
-    "q201_lorenz_curve" -> q201OracleSql,
-    "q195_calibration_bins" -> q195OracleSql,
-    "q196_seasonal_profile" -> q196OracleSql,
-    "q197_session_paths" -> q197OracleSql,
-    "q198_changepoint" -> q198OracleSql,
-    "q199_edge_jaccard" -> q199OracleSql,
-    "q191_reciprocal_nn" -> q191OracleSql,
-    "q192_decayed_engagement" -> q192OracleSql,
-    "q193_frequent_triples" -> q193OracleSql,
-    "q194_typo_join" -> q194OracleSql,
-    "q356_typo_join_dl" -> q356OracleSql,
-    "q180_corr_matrix" -> q180OracleSql,
-    "q181_kmv_sketch" -> q181OracleSql,
-    "q182_seq_pattern" -> q182OracleSql,
-    "q183_link_prediction" -> q183OracleSql,
-    "q184_curriculum_order" -> q184OracleSql,
-    "q185_grid_join" -> q185OracleSql,
-    "q186_dbscan_labels" -> q186OracleSql,
-    "q187_auc_exact" -> q187OracleSql,
-    "q189_kmv_setops" -> q189OracleSql,
-    "q190_anova_f" -> q190OracleSql)
+        2), q230OracleSql),
+    Q("q210_decision_stump", q210DecisionStump, q210OracleSql),
+    Q("q211_rolling_wau", q211RollingWau, q211OracleSql),
+    Q("q212_rare_collapse", q212RareCollapse, q212OracleSql),
+    Q("q208_srm_check", q208SrmCheck, q208OracleSql),
+    Q("q209_stickiness", q209Stickiness, q209OracleSql),
+    Q("q205_modularity", q205Modularity, q205OracleSql),
+    Q("q206_conductance", q206Conductance, q206OracleSql),
+    Q("q207_assortativity", q207Assortativity, q207OracleSql),
+    Q("q202_hist_intersection", q202HistIntersection, q202OracleSql),
+    Q("q203_target_encoding", q203TargetEncoding, q203OracleSql),
+    Q("q204_negative_sampling", q204NegativeSampling, q204OracleSql),
+    Q("q200_conversion_curve", q200ConversionCurve, q200OracleSql),
+    Q("q201_lorenz_curve", q201LorenzCurve, q201OracleSql),
+    Q("q195_calibration_bins", q195CalibrationBins, q195OracleSql),
+    Q("q196_seasonal_profile", q196SeasonalProfile, q196OracleSql),
+    Q("q197_session_paths", q197SessionPaths, q197OracleSql),
+    Q("q198_changepoint", q198Changepoint, q198OracleSql),
+    Q("q199_edge_jaccard", q199EdgeJaccard, q199OracleSql),
+    Q("q191_reciprocal_nn", q191ReciprocalNn, q191OracleSql),
+    Q("q192_decayed_engagement", q192DecayedEngagement, q192OracleSql),
+    Q("q193_frequent_triples", q193FrequentTriples, q193OracleSql),
+    Q("q194_typo_join", q194TypoJoin, q194OracleSql),
+    Q("q356_typo_join_dl", q356TypoJoinDl, q356OracleSql),
+    Q("q180_corr_matrix", q180CorrMatrix, q180OracleSql),
+    Q("q181_kmv_sketch", q181KmvSketch, q181OracleSql),
+    Q("q182_seq_pattern", q182SeqPattern, q182OracleSql),
+    Q("q183_link_prediction", q183LinkPrediction, q183OracleSql),
+    Q("q184_curriculum_order", q184CurriculumOrder, q184OracleSql),
+    Q("q185_grid_join", q185GridJoin, q185OracleSql),
+    Q("q186_dbscan_labels", q186DbscanLabels, q186OracleSql),
+    Q("q187_auc_exact", q187AucExact, q187OracleSql),
+    Q("q189_kmv_setops", q189KmvSetOps, q189OracleSql),
+    Q("q190_anova_f", q190AnovaF, q190OracleSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.sources.Tables
 
 /** The reference's demonstrated capability surface (SURVEY.md §2.1),
@@ -503,102 +504,73 @@ object Core {
           AS corrupt_ppm
         FROM documents"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q477_malformed_csv_audit" -> (q477MalformedCsvAudit _),
-    "q453_orc_roundtrip" -> (q453OrcRoundtrip _),
-    "q296_date_dim" -> (q296DateDim _),
-    "q294_analyze_stats" -> (q294AnalyzeStats _),
-    "q291_csv_roundtrip" -> (q291CsvRoundtrip _),
-    "q271_partitioned_write" -> (q271PartitionedWrite _),
-    "q272_schema_evolution" -> (q272SchemaEvolution _),
-    "q01_full_scan" -> (q01FullScan _),
-    "q02_readback_projection" -> (q02ReadbackProjection _),
-    "q03_projection" -> (q03Projection _),
-    "q04_rename_lowercase" -> (q04RenameLowercase _),
-    "q05_point_lookup" -> (q05PointLookup _),
-    "q06_filter_nonkey" -> (q06FilterNonkey _),
-    "q07_filter_string" -> (q07FilterString _),
-    "q08_partition_scan" -> (q08PartitionScan _),
-    "q09_denorm_join" -> (q09DenormJoin _),
-    "q10_join_stringkey" -> (q10JoinStringkey _),
-    "q11_self_join" -> (q11SelfJoin _),
-    "q12_multiway_join" -> (q12MultiwayJoin _),
-    "q13_count" -> (q13Count _),
-    "q14_distinct" -> (q14Distinct _),
-    "q15_cluster_order" -> (q15ClusterOrder _),
-    "q16_timestamp_format" -> (q16TimestampFormat _),
-    "q213_sink_order" -> (q213SinkOrder _))
-
-  /** DuckDB oracles (ANSI SQL over the same parquet tables). */
-  val oracleSql: Map[String, String] = Map(
-    "q477_malformed_csv_audit" -> q477OracleSql,
-    "q453_orc_roundtrip" -> q453OracleSql,
-    "q296_date_dim" -> q296OracleSql,
-    "q294_analyze_stats" -> q294OracleSql,
-    "q291_csv_roundtrip" -> q291OracleSql,
-    "q271_partitioned_write" -> q271OracleSql,
-    "q272_schema_evolution" -> q272OracleSql,
-    "q01_full_scan" ->
-      "SELECT * FROM customer",
-    "q02_readback_projection" ->
+  val registry: Seq[Q] = Seq(
+    Q("q477_malformed_csv_audit", q477MalformedCsvAudit, q477OracleSql),
+    Q("q453_orc_roundtrip", q453OrcRoundtrip, q453OracleSql),
+    Q("q296_date_dim", q296DateDim, q296OracleSql),
+    Q("q294_analyze_stats", q294AnalyzeStats, q294OracleSql),
+    Q("q291_csv_roundtrip", q291CsvRoundtrip, q291OracleSql),
+    Q("q271_partitioned_write", q271PartitionedWrite, q271OracleSql),
+    Q("q272_schema_evolution", q272SchemaEvolution, q272OracleSql),
+    Q("q01_full_scan", q01FullScan, "SELECT * FROM customer"),
+    Q("q02_readback_projection", q02ReadbackProjection,
       """SELECT c_custkey, c_name, CAST(c_nationkey AS BIGINT) AS c_nationkey
-         FROM customer""",
-    "q03_projection" ->
+         FROM customer"""),
+    Q("q03_projection", q03Projection,
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
-         l_returnflag, l_linestatus FROM lineitem""",
-    "q04_rename_lowercase" ->
+         l_returnflag, l_linestatus FROM lineitem"""),
+    Q("q04_rename_lowercase", q04RenameLowercase,
       """SELECT c_custkey AS custkey, c_name AS name,
          c_nationkey AS nationkey, c_acctbal AS acctbal,
-         c_mktsegment AS mktsegment FROM customer""",
-    "q05_point_lookup" ->
-      "SELECT * FROM customer WHERE c_custkey = 42",
-    "q06_filter_nonkey" ->
-      "SELECT * FROM customer WHERE c_nationkey = 7",
-    "q07_filter_string" ->
+         c_mktsegment AS mktsegment FROM customer"""),
+    Q("q05_point_lookup", q05PointLookup,
+      "SELECT * FROM customer WHERE c_custkey = 42"),
+    Q("q06_filter_nonkey", q06FilterNonkey,
+      "SELECT * FROM customer WHERE c_nationkey = 7"),
+    Q("q07_filter_string", q07FilterString,
       """SELECT p_partkey, p_name, p_brand, p_size FROM part
-         WHERE p_brand = 'Brand#12'""",
-    "q08_partition_scan" ->
+         WHERE p_brand = 'Brand#12'"""),
+    Q("q08_partition_scan", q08PartitionScan,
       """SELECT n_name, CAST(c_custkey AS BIGINT) AS c_custkey, c_name
          FROM customer JOIN nation ON c_nationkey = n_nationkey
-         WHERE n_nationkey = 7""",
-    "q09_denorm_join" ->
+         WHERE n_nationkey = 7"""),
+    Q("q09_denorm_join", q09DenormJoin,
       """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
          CAST(c_custkey AS BIGINT) AS c_custkey, c_name
-         FROM customer JOIN nation ON c_nationkey = n_nationkey""",
-    "q10_join_stringkey" ->
+         FROM customer JOIN nation ON c_nationkey = n_nationkey"""),
+    Q("q10_join_stringkey", q10JoinStringkey,
       """SELECT o_orderkey, o.o_orderpriority, d.n_orders
          FROM orders o JOIN (SELECT o_orderpriority, count(*) AS n_orders
                              FROM orders GROUP BY o_orderpriority) d
-         ON o.o_orderpriority = d.o_orderpriority""",
-    "q11_self_join" ->
+         ON o.o_orderpriority = d.o_orderpriority"""),
+    Q("q11_self_join", q11SelfJoin,
       """SELECT e.c_custkey AS c_custkey, e.c_name AS c_name,
          m.c_custkey AS mgr_custkey, m.c_name AS mgr_name
          FROM customer e JOIN customer m
-         ON CAST(e.c_nationkey AS BIGINT) = m.c_custkey""",
-    "q12_multiway_join" ->
+         ON CAST(e.c_nationkey AS BIGINT) = m.c_custkey"""),
+    Q("q12_multiway_join", q12MultiwayJoin,
       """SELECT l_orderkey, l_linenumber, c_custkey, n_name, r_name
          FROM lineitem
          JOIN orders ON l_orderkey = o_orderkey
          JOIN customer ON o_custkey = c_custkey
          JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey""",
-    "q13_count" ->
-      "SELECT count(*) AS n FROM orders",
-    "q14_distinct" ->
+         JOIN region ON n_regionkey = r_regionkey"""),
+    Q("q13_count", q13Count, "SELECT count(*) AS n FROM orders"),
+    Q("q14_distinct", q14Distinct,
       """SELECT DISTINCT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name
-         FROM customer JOIN nation ON c_nationkey = n_nationkey""",
-    "q15_cluster_order" ->
+         FROM customer JOIN nation ON c_nationkey = n_nationkey"""),
+    Q("q15_cluster_order", q15ClusterOrder,
       """SELECT c_nationkey, c_custkey,
          row_number() OVER (PARTITION BY c_nationkey ORDER BY c_custkey)
            AS rn
-         FROM customer""",
-    "q16_timestamp_format" ->
+         FROM customer"""),
+    Q("q16_timestamp_format", q16TimestampFormat,
       """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d %H:%M:%S')
-         AS o_date_str FROM orders""",
+         AS o_date_str FROM orders"""),
     // The oracle states the sink's order CONTRACT from the source table:
     // the per-bucket census must survive the write+read-back unchanged and
     // both violation counters must be exactly zero.
-    "q213_sink_order" ->
+    Q("q213_sink_order", q213SinkOrder,
       """WITH k AS (SELECT o_custkey, count(*) AS nr
                     FROM orders GROUP BY o_custkey)
          SELECT CAST(o_custkey % 16 AS BIGINT) AS bucket,
@@ -606,5 +578,5 @@ object Core {
                 CAST(count(*) AS BIGINT) AS n_keys,
                 CAST(0 AS BIGINT) AS viol,
                 CAST(0 AS BIGINT) AS split_keys
-         FROM k GROUP BY 1""")
+         FROM k GROUP BY 1"""))
 }

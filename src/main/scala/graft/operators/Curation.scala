@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.sources.Tables
 
 /** Training-data curation planners and sketches (round 11): the
@@ -551,7 +552,6 @@ object Curation {
     * bucketing is stateless and narrow, so the same code runs under
     * a readStream source for q517). */
   private[graft] def dsirTokenBuckets(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(docs.sparkSession)
     docs.select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
@@ -631,19 +631,11 @@ object Curation {
 
   // ------------------------------------------------------------ wiring
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q513_dsir_weights" -> (q513DsirWeights _),
-    "q496_hll_distinct" -> (q496HllDistinct _),
-    "q497_pass_at_k" -> (q497PassAtK _),
-    "q498_split_gain" -> (q498SplitGain _),
-    "q499_chinchilla_split" -> (q499ChinchillaSplit _),
-    "q504_hll_set_algebra" -> (q504HllSetAlgebra _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q513_dsir_weights" -> q513OracleSql,
-    "q496_hll_distinct" -> q496OracleSql,
-    "q497_pass_at_k" -> q497OracleSql,
-    "q498_split_gain" -> q498OracleSql,
-    "q499_chinchilla_split" -> q499OracleSql,
-    "q504_hll_set_algebra" -> q504OracleSql)
+  val registry: Seq[Q] = Seq(
+    Q("q513_dsir_weights", q513DsirWeights, q513OracleSql),
+    Q("q496_hll_distinct", q496HllDistinct, q496OracleSql),
+    Q("q497_pass_at_k", q497PassAtK, q497OracleSql),
+    Q("q498_split_gain", q498SplitGain, q498OracleSql),
+    Q("q499_chinchilla_split", q499ChinchillaSplit, q499OracleSql),
+    Q("q504_hll_set_algebra", q504HllSetAlgebra, q504OracleSql))
 }

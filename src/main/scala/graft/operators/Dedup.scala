@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.functions.PortableHash._
 import graft.sources.Tables
 
@@ -160,7 +161,6 @@ object Dedup {
     * on a boilerplate-heavy crawl where one band key collects millions of
     * documents. */
   def q30DedupMinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     minhashCandidatePairs(plantedDocs(s, dir))
   }
 
@@ -236,7 +236,6 @@ object Dedup {
     * (in-batch survivors collapse now; vs-corpus hits drop the batch
     * doc). */
   def q152IncrementalLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val banded = bandedSignatures(plantedDocs(s, dir))
     val corpusB = banded.filter(col("doc_id") < PlantedOffset)
     val batchB = banded.filter(col("doc_id") >= PlantedOffset)
@@ -417,7 +416,6 @@ object Dedup {
     * verify pass; the sweep rides the candidate frame as three
     * conditional aggregates. */
   def q483DedupThresholdSweep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val docs = plantedDocs(s, dir)
     val hs = docs
       .withColumn("sw_w", split(col("text"), " "))
@@ -656,7 +654,6 @@ object Dedup {
     * the planted drop-last-word twins (J = (k-3)/(k-2) for k-word
     * docs). */
   def q87VerifyCandidates(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val docs = plantedDocs(s, dir)
     // per-doc shingle SET rows (array_distinct upstream): verification is
     // an in-row array_intersect after joining each candidate to its two
@@ -729,7 +726,6 @@ object Dedup {
     * documented bias, toward over-estimating overlap and hence
     * UNDER-estimating N̂. */
   def q338CaptureRecapture(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     // shared verification side: per-doc shingle SET rows (q87's shape)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
@@ -882,7 +878,6 @@ object Dedup {
   /** Banded (doc_id, sh, tripleid, key24) index rows, pre-cap. */
   private[graft] def q71BandedIndex(
       s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val comboArr = tripleKeyExprs("div")
       .map { case (tid, key) => s"struct($tid AS tripleid, $key AS key24)" }
       .mkString("array(", ", ", ")")
@@ -1059,7 +1054,6 @@ object Dedup {
     * document collapses to one int — near-dup = small hamming distance,
     * testable with a single groupBy at any scale. */
   def q31DedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     // native one-pass expression: 32 bit-counters in a single array scan
     // (the HOF form needs 32 separate aggregate() folds over the tokens)
     t(s, dir, "documents")
@@ -1164,8 +1158,7 @@ object Dedup {
     * only within a bucket. Returns (vec_id_1, vec_id_2) with cosine ≥ 0.3
     * (the corpus is i.i.d. random; real near-dups would use ≥ 0.9). */
   def q33DedupEmbedding(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.{register, vec_dot}
-    register(s)
+    import graft.functions.VectorFunctions.vec_dot
     val bucketTerms = srpBucketExpr(NumPlanes, "spark")
     val e = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
@@ -1318,8 +1311,7 @@ object Dedup {
     * the O(log n)-round star CC — no stage is corpus². */
   def q501AdaptiveSrpClusters(s: SparkSession, dir: String)
       : DataFrame = {
-    import graft.functions.VectorFunctions.{register, vec_dot}
-    register(s)
+    import graft.functions.VectorFunctions.vec_dot
     val base = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))
@@ -1417,7 +1409,6 @@ object Dedup {
     * round 12 after its sf10 disk-spill wall), and the linear
     * production-path alternative for corpus-wide dedup is q30+q87. */
   def q101SetSimJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     // one SET row per doc (shingles are array_distinct'd): the exploded
     // form exists only transiently for the edf census and the prefix
     // rank; verification is an in-row set intersect against this frame,
@@ -1688,7 +1679,6 @@ object Dedup {
     * prefixes of length-class-bounded df — linear in corpus size for
     * the fixed cap; every stage an equi-join. */
   def q110ContainmentJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
       .filter(size(col("sw_w")) >= ShingleN)
@@ -2060,7 +2050,6 @@ object Dedup {
     * band index (q152's bucketed layout) and the splits frame prunes
     * to (doc_id, split) — nothing here grows super-linearly. */
   def q224SplitLeakage(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val docs = plantedDocs(s, dir)
     val splits = docs
       .select(col("doc_id"), expr("poly_hash(text) % 100").as("b"))
@@ -2139,7 +2128,6 @@ object Dedup {
     * pairs, so the r=1 geometry's huge buckets cost a census row, not
     * a blow-up. The curve side is a literal frame. */
   def q269LshCurve(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     import s.implicits._
     val docs = t(s, dir, "documents").select("doc_id", "text")
     val measured = LshPlanGeoms.map { case (b, r) =>
@@ -2207,7 +2195,6 @@ object Dedup {
     * similarity join); the comparison is in-row zip/intersect
     * arithmetic on the two cached set rows. */
   def q284MinhashAccuracy(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
       .filter(size(col("sw_w")) >= ShingleN)
@@ -2280,7 +2267,6 @@ object Dedup {
     * planted-offset equi-join, a fixed-k in-row fold; nothing
     * corpus². */
   def q503BbitMinhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
       .filter(size(col("sw_w")) >= ShingleN)
@@ -2364,7 +2350,6 @@ object Dedup {
     * before the 4-row census; pair volume is q30's audited-linear
     * collision volume, never all-pairs. */
   def q295CandidateTriage(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val banded = bandedSignatures(plantedDocs(s, dir))
     val x = banded.as("x")
     val y = banded.as("y")
@@ -2526,7 +2511,6 @@ object Dedup {
     * machinery — the point is the COMPOSITION, which is how a production
     * pipeline gets paragraph dedup without a second engine. */
   def q300ChunkNearDup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     chunkPairCensus(minhashCandidatePairs(
       chunkPseudoDocs(plantedDocs(s, dir))))
   }
@@ -2624,7 +2608,6 @@ object Dedup {
     * prefixes at looser τ raise the constant, not the growth);
     * counts, not pairs, are released. */
   def q318ThresholdSweep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
       .filter(size(col("sw_w")) >= ShingleN)
@@ -2879,7 +2862,6 @@ object Dedup {
     * detect duplicated spans ≥ N tokens; shorter overlaps are below
     * the declared resolution). */
   def q515DupSpanFraction(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val n = DupGramN
     val grams = t(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
@@ -2945,71 +2927,37 @@ object Dedup {
         FROM base b LEFT JOIN cov c ON c.doc_id = b.doc_id"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q515_dup_span_fraction" -> (q515DupSpanFraction _),
-    "q350_fellegi_sunter" -> (q350FellegiSunter _),
-    "q338_capture_recapture" -> (q338CaptureRecapture _),
-    "q318_setsim_threshold_sweep" -> (q318ThresholdSweep _),
-    "q314_bcubed_eval" -> (q314BcubedEval _),
-    "q301_containment_eval" -> (q301ContainmentEval _),
-    "q300_chunk_near_dup" -> (q300ChunkNearDup _),
-    "q295_candidate_triage" -> (q295CandidateTriage _),
-    "q284_minhash_accuracy" -> (q284MinhashAccuracy _),
-    "q503_bbit_minhash" -> (q503BbitMinhash _),
-    "q269_lsh_curve" -> (q269LshCurve _),
-    "q224_split_leakage" -> (q224SplitLeakage _),
-    "q152_incremental_lsh" -> (q152IncrementalLsh _),
-    "q139_dedup_eval" -> (q139DedupEval _),
-    "q124_source_dup_matrix" -> (q124SourceDupMatrix _),
-    "q125_dedup_survivors" -> (q125DedupSurvivors _),
-    "q119_embedding_clusters" -> (q119EmbeddingClusters _),
-    "q501_adaptive_srp_clusters" -> (q501AdaptiveSrpClusters _),
-    "q110_containment_join" -> (q110ContainmentJoin _),
-    "q101_setsim_join" -> (q101SetSimJoin _),
-    "q30_dedup_minhash_lsh" -> (q30DedupMinhashLsh _),
-    "q31_dedup_simhash" -> (q31DedupSimhash _),
-    "q32_dedup_ngram_jaccard" -> (q32DedupNgramJaccard _),
-    "q33_dedup_embedding" -> (q33DedupEmbedding _),
-    "q63_dedup_clusters" -> (q63DedupClusters _),
-    "q464_cluster_size_profile" -> (q464ClusterSizeProfile _),
-    "q483_dedup_threshold_sweep" -> (q483DedupThresholdSweep _),
-    "q494_dedup_savings" -> (q494DedupSavings _),
-    "q222_incremental_cc" -> (q222IncrementalCc _),
-    "q70_edit_distance" -> (q70EditDistance _),
-    "q71_simhash_hamming" -> (q71SimhashHamming _),
-    "q87_verify_candidates" -> (q87VerifyCandidates _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q515_dup_span_fraction" -> q515OracleSql,
-    "q350_fellegi_sunter" -> q350OracleSql,
-    "q338_capture_recapture" -> q338OracleSql,
-    "q318_setsim_threshold_sweep" -> q318OracleSql,
-    "q314_bcubed_eval" -> q314OracleSql,
-    "q301_containment_eval" -> q301OracleSql,
-    "q300_chunk_near_dup" -> q300OracleSql,
-    "q295_candidate_triage" -> q295OracleSql,
-    "q284_minhash_accuracy" -> q284OracleSql,
-    "q503_bbit_minhash" -> q503OracleSql,
-    "q269_lsh_curve" -> q269OracleSql,
-    "q224_split_leakage" -> q224OracleSql,
-    "q152_incremental_lsh" -> q152OracleSql,
-    "q139_dedup_eval" -> q139OracleSql,
-    "q124_source_dup_matrix" -> q124OracleSql,
-    "q125_dedup_survivors" -> q125OracleSql,
-    "q119_embedding_clusters" -> q119OracleSql,
-    "q501_adaptive_srp_clusters" -> q501OracleSql,
-    "q110_containment_join" -> q110OracleSql,
-    "q101_setsim_join" -> q101OracleSql,
-    "q30_dedup_minhash_lsh" -> q30OracleSql,
-    "q31_dedup_simhash" -> q31OracleSql,
-    "q32_dedup_ngram_jaccard" -> q32OracleSql,
-    "q33_dedup_embedding" -> q33OracleSql,
-    "q63_dedup_clusters" -> q63OracleSql,
-    "q464_cluster_size_profile" -> q464OracleSql,
-    "q483_dedup_threshold_sweep" -> q483OracleSql,
-    "q494_dedup_savings" -> q494OracleSql,
-    "q222_incremental_cc" -> q222OracleSql,
-    "q70_edit_distance" -> q70OracleSql,
-    "q71_simhash_hamming" -> q71OracleSql,
-    "q87_verify_candidates" -> q87OracleSql)
+  val registry: Seq[Q] = Seq(
+    Q("q515_dup_span_fraction", q515DupSpanFraction, q515OracleSql),
+    Q("q350_fellegi_sunter", q350FellegiSunter, q350OracleSql),
+    Q("q338_capture_recapture", q338CaptureRecapture, q338OracleSql),
+    Q("q318_setsim_threshold_sweep", q318ThresholdSweep, q318OracleSql),
+    Q("q314_bcubed_eval", q314BcubedEval, q314OracleSql),
+    Q("q301_containment_eval", q301ContainmentEval, q301OracleSql),
+    Q("q300_chunk_near_dup", q300ChunkNearDup, q300OracleSql),
+    Q("q295_candidate_triage", q295CandidateTriage, q295OracleSql),
+    Q("q284_minhash_accuracy", q284MinhashAccuracy, q284OracleSql),
+    Q("q503_bbit_minhash", q503BbitMinhash, q503OracleSql),
+    Q("q269_lsh_curve", q269LshCurve, q269OracleSql),
+    Q("q224_split_leakage", q224SplitLeakage, q224OracleSql),
+    Q("q152_incremental_lsh", q152IncrementalLsh, q152OracleSql),
+    Q("q139_dedup_eval", q139DedupEval, q139OracleSql),
+    Q("q124_source_dup_matrix", q124SourceDupMatrix, q124OracleSql),
+    Q("q125_dedup_survivors", q125DedupSurvivors, q125OracleSql),
+    Q("q119_embedding_clusters", q119EmbeddingClusters, q119OracleSql),
+    Q("q501_adaptive_srp_clusters", q501AdaptiveSrpClusters, q501OracleSql),
+    Q("q110_containment_join", q110ContainmentJoin, q110OracleSql),
+    Q("q101_setsim_join", q101SetSimJoin, q101OracleSql),
+    Q("q30_dedup_minhash_lsh", q30DedupMinhashLsh, q30OracleSql),
+    Q("q31_dedup_simhash", q31DedupSimhash, q31OracleSql),
+    Q("q32_dedup_ngram_jaccard", q32DedupNgramJaccard, q32OracleSql),
+    Q("q33_dedup_embedding", q33DedupEmbedding, q33OracleSql),
+    Q("q63_dedup_clusters", q63DedupClusters, q63OracleSql),
+    Q("q464_cluster_size_profile", q464ClusterSizeProfile, q464OracleSql),
+    Q("q483_dedup_threshold_sweep", q483DedupThresholdSweep, q483OracleSql),
+    Q("q494_dedup_savings", q494DedupSavings, q494OracleSql),
+    Q("q222_incremental_cc", q222IncrementalCc, q222OracleSql),
+    Q("q70_edit_distance", q70EditDistance, q70OracleSql),
+    Q("q71_simhash_hamming", q71SimhashHamming, q71OracleSql),
+    Q("q87_verify_candidates", q87VerifyCandidates, q87OracleSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.sources.Tables
 
 /** North-star extension surface (SURVEY.md §2.3): the operators a
@@ -107,8 +108,7 @@ object Extensions {
   // cross join: at scale this is a map-only pass over the embeddings + a
   // TakeOrderedAndProject — no shuffle of the data itself.
   def q25TopkSimilarity(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.{register, vec_dot}
-    register(s)
+    import graft.functions.VectorFunctions.vec_dot
     val emb = t(s, dir, "embeddings")
     val probe = emb.filter(col("vec_id") === 0L)
       .select(col("embedding").cast("array<double>").as("probe"))
@@ -496,7 +496,6 @@ object Extensions {
     * filter), and the false-positive rate within 5% of non-matching
     * rows. */
   def q88BloomPrune(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     Tables.registerAll(s, dir)
     val (estItems, numBits) = bloomGeometry(s)
     s.sql(
@@ -825,7 +824,6 @@ object Extensions {
   // custom aggregate would need a decimal buffer past that (documented
   // trade; the aggregate demo is the point of this query).
   def q56Moments(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     t(s, dir, "customer")
       .groupBy("c_nationkey")
       .agg(
@@ -3933,147 +3931,56 @@ object Extensions {
           CAST(count(DISTINCT k) AS BIGINT) AS k_distinct
         FROM p"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q482_session_gap_sweep" -> (q482SessionGapSweep _),
-    "q490_json_props_profile" -> (q490JsonPropsProfile _),
-    "q468_histogram_error_advisor" -> (q468HistogramErrorAdvisor _),
-    "q465_dict_encoding_advisor" -> (q465DictEncodingAdvisor _),
-    "q466_date_gap_audit" -> (q466DateGapAudit _),
-    "q417_for_encoding" -> (q417ForEncoding _),
-    "q410_encoding_advisor" -> (q410EncodingAdvisor _),
-    "q290_session_conversion" -> (q290SessionConversion _),
-    "q288_shipping_sla" -> (q288ShippingSla _),
-    "q278_layout_pruning_eval" -> (q278LayoutPruningEval _),
-    "q275_attribution_sweep" -> (q275AttributionSweep _),
-    "q245_peak_concurrency" -> (q245PeakConcurrency _),
-    "q232_lateness_audit" -> (q232LatenessAudit _),
-    "q233_t_closeness" -> (q233TCloseness _),
-    "q229_tv_distance" -> (q229TvDistance _),
-    "q226_join_blowup" -> (q226JoinBlowup _),
-    "q150_markov_transitions" -> (q150MarkovTransitions _),
-    "q123_bucketed_join" -> (q123BucketedJoin _),
-    "q129_zorder_layout" -> (q129ZorderLayout _),
-    "q132_ks_drift" -> (q132KsDrift _),
-    "q156_categorical_drift" -> (q156CategoricalDrift _),
-    "q158_zone_map" -> (q158ZoneMap _),
-    "q160_forward_fill" -> (q160ForwardFill _),
-    "q161_asof_join" -> (q161AsofJoin _),
-    "q162_mad_outliers" -> (q162MadOutliers _),
-    "q163_salted_join" -> (q163SaltedJoin _),
-    "q508_aqe_skew_parity" -> (q508AqeSkewParity _),
-    "q164_rolling_window" -> (q164RollingWindow _),
-    "q167_k_anonymity" -> (q167KAnonymity _),
-    "q217_l_diversity" -> (q217LDiversity _),
-    "q219_burst_detection" -> (q219BurstDetection _),
-    "q168_equidepth_histogram" -> (q168EquidepthHistogram _),
-    "q169_interval_join" -> (q169IntervalJoin _),
-    "q170_linear_interp" -> (q170LinearInterp _),
-    "q171_dp_counts" -> (q171DpCounts _),
-    "q173_bitmap_index" -> (q173BitmapIndex _),
-    "q174_ab_lift" -> (q174AbLift _),
-    "q175_gini" -> (q175Gini _),
-    "q176_weighted_median" -> (q176WeightedMedian _),
-    "q177_assoc_rules" -> (q177AssocRules _),
-    "q178_twap" -> (q178Twap _),
-    "q179_percentile_interp" -> (q179PercentileInterp _),
-    "q134_funnel" -> (q134Funnel _),
-    "q143_state_intervals" -> (q143StateIntervals _),
-    "q116_pareto_front" -> (q116ParetoFront _),
-    "q104_partition_stats" -> (q104PartitionStats _),
-    "q106_winsorize" -> (q106Winsorize _),
-    "q107_shipping_priority" -> (q107ShippingPriority _),
-    "q20_groupby_agg" -> (q20GroupbyAgg _),
-    "q21_window_rank" -> (q21WindowRank _),
-    "q22_semi_anti_join" -> (q22SemiAntiJoin _),
-    "q23_dedup_exact" -> (q23DedupExact _),
-    "q24_text_stats" -> (q24TextStats _),
-    "q25_topk_similarity" -> (q25TopkSimilarity _),
-    "q26_event_windows" -> (q26EventWindows _),
-    "q27_json_extract" -> (q27JsonExtract _),
-    "q28_setops" -> (q28Setops _),
-    "q39_rollup" -> (q39Rollup _),
-    "q40_cube" -> (q40Cube _),
-    "q41_sessionize" -> (q41Sessionize _),
-    "q67_grouping_sets" -> (q67GroupingSets _),
-    "q68_map_funcs" -> (q68MapFuncs _),
-    "q69_rank_family" -> (q69RankFamily _),
-    "q73_argminmax" -> (q73ArgMinMax _),
-    "q74_sliding_windows" -> (q74SlidingWindows _),
-    "q77_correlated_subquery" -> (q77CorrelatedSubquery _),
-    "q78_lateral" -> (q78Lateral _),
-    "q82_zscore_outliers" -> (q82ZscoreOutliers _),
-    "q83_histogram" -> (q83Histogram _),
-    "q88_bloom_prune" -> (q88BloomPrune _),
-    "q92_click_attribution" -> (q92ClickAttribution _),
-    "q335_multi_touch" -> (q335MultiTouch _),
-    "q93_retention_cohorts" -> (q93RetentionCohorts _),
-    "q94_mergeable_stats" -> (q94MergeableStats _),
-    "q43_scalar_funcs" -> (q43ScalarFuncs _),
-    "q44_left_outer" -> (q44LeftOuter _),
-    "q45_full_outer" -> (q45FullOuter _),
-    "q46_window_frames" -> (q46WindowFrames _),
-    "q47_approx_distinct" -> (q47ApproxDistinct _),
-    "q48_profile" -> (q48Profile _),
-    "q49_pivot" -> (q49Pivot _),
-    "q50_unpivot" -> (q50Unpivot _),
-    "q51_explode" -> (q51Explode _),
-    "q53_date_funcs" -> (q53DateFuncs _),
-    "q54_json_struct" -> (q54JsonStruct _),
-    "q55_array_funcs" -> (q55ArrayFuncs _),
-    "q56_moments" -> (q56Moments _),
-    "q57_asof_join" -> (q57AsofJoin _),
-    "q58_range_join" -> (q58RangeJoin _),
-    "q60_percentiles" -> (q60Percentiles _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q482_session_gap_sweep" -> q482OracleSql,
-    "q490_json_props_profile" -> q490OracleSql,
-    "q468_histogram_error_advisor" -> q468OracleSql,
-    "q465_dict_encoding_advisor" -> q465OracleSql,
-    "q466_date_gap_audit" -> q466OracleSql,
-    "q417_for_encoding" -> q417OracleSql,
-    "q410_encoding_advisor" -> q410OracleSql,
-    "q290_session_conversion" -> q290OracleSql,
-    "q288_shipping_sla" -> q288OracleSql,
-    "q278_layout_pruning_eval" -> q278OracleSql,
-    "q275_attribution_sweep" -> q275OracleSql,
-    "q245_peak_concurrency" -> q245OracleSql,
-    "q232_lateness_audit" -> q232OracleSql,
-    "q233_t_closeness" -> q233OracleSql,
-    "q229_tv_distance" -> q229OracleSql,
-    "q226_join_blowup" -> q226OracleSql,
-    "q150_markov_transitions" -> q150OracleSql,
-    "q116_pareto_front" -> q116OracleSql,
-    "q129_zorder_layout" -> q129OracleSql,
-    "q132_ks_drift" -> q132OracleSql,
-    "q156_categorical_drift" -> q156OracleSql,
-    "q158_zone_map" -> q158OracleSql,
-    "q160_forward_fill" -> q160OracleSql,
-    "q161_asof_join" -> q161OracleSql,
-    "q162_mad_outliers" -> q162OracleSql,
-    "q163_salted_join" -> q163OracleSql,
-    "q508_aqe_skew_parity" -> q508OracleSql,
-    "q164_rolling_window" -> q164OracleSql,
-    "q167_k_anonymity" -> q167OracleSql,
-    "q217_l_diversity" -> q217OracleSql,
-    "q219_burst_detection" -> q219OracleSql,
-    "q168_equidepth_histogram" -> q168OracleSql,
-    "q169_interval_join" -> q169OracleSql,
-    "q170_linear_interp" -> q170OracleSql,
-    "q171_dp_counts" -> q171OracleSql,
-    "q173_bitmap_index" -> q173OracleSql,
-    "q174_ab_lift" -> q174OracleSql,
-    "q175_gini" -> q175OracleSql,
-    "q176_weighted_median" -> q176OracleSql,
-    "q177_assoc_rules" -> q177OracleSql,
-    "q178_twap" -> q178OracleSql,
-    "q179_percentile_interp" -> q179OracleSql,
-    "q134_funnel" -> q134OracleSql,
-    "q143_state_intervals" -> q143OracleSql,
-    "q104_partition_stats" -> q104OracleSql,
-    "q106_winsorize" -> q106OracleSql,
-    "q107_shipping_priority" -> q107OracleSql,
-    "q20_groupby_agg" ->
+  val registry: Seq[Q] = Seq(
+    Q("q482_session_gap_sweep", q482SessionGapSweep, q482OracleSql),
+    Q("q490_json_props_profile", q490JsonPropsProfile, q490OracleSql),
+    Q("q468_histogram_error_advisor", q468HistogramErrorAdvisor, q468OracleSql),
+    Q("q465_dict_encoding_advisor", q465DictEncodingAdvisor, q465OracleSql),
+    Q("q466_date_gap_audit", q466DateGapAudit, q466OracleSql),
+    Q("q417_for_encoding", q417ForEncoding, q417OracleSql),
+    Q("q410_encoding_advisor", q410EncodingAdvisor, q410OracleSql),
+    Q("q290_session_conversion", q290SessionConversion, q290OracleSql),
+    Q("q288_shipping_sla", q288ShippingSla, q288OracleSql),
+    Q("q278_layout_pruning_eval", q278LayoutPruningEval, q278OracleSql),
+    Q("q275_attribution_sweep", q275AttributionSweep, q275OracleSql),
+    Q("q245_peak_concurrency", q245PeakConcurrency, q245OracleSql),
+    Q("q232_lateness_audit", q232LatenessAudit, q232OracleSql),
+    Q("q233_t_closeness", q233TCloseness, q233OracleSql),
+    Q("q229_tv_distance", q229TvDistance, q229OracleSql),
+    Q("q226_join_blowup", q226JoinBlowup, q226OracleSql),
+    Q("q150_markov_transitions", q150MarkovTransitions, q150OracleSql),
+    Q("q123_bucketed_join", q123BucketedJoin, q123OracleSql),
+    Q("q129_zorder_layout", q129ZorderLayout, q129OracleSql),
+    Q("q132_ks_drift", q132KsDrift, q132OracleSql),
+    Q("q156_categorical_drift", q156CategoricalDrift, q156OracleSql),
+    Q("q158_zone_map", q158ZoneMap, q158OracleSql),
+    Q("q160_forward_fill", q160ForwardFill, q160OracleSql),
+    Q("q161_asof_join", q161AsofJoin, q161OracleSql),
+    Q("q162_mad_outliers", q162MadOutliers, q162OracleSql),
+    Q("q163_salted_join", q163SaltedJoin, q163OracleSql),
+    Q("q508_aqe_skew_parity", q508AqeSkewParity, q508OracleSql),
+    Q("q164_rolling_window", q164RollingWindow, q164OracleSql),
+    Q("q167_k_anonymity", q167KAnonymity, q167OracleSql),
+    Q("q217_l_diversity", q217LDiversity, q217OracleSql),
+    Q("q219_burst_detection", q219BurstDetection, q219OracleSql),
+    Q("q168_equidepth_histogram", q168EquidepthHistogram, q168OracleSql),
+    Q("q169_interval_join", q169IntervalJoin, q169OracleSql),
+    Q("q170_linear_interp", q170LinearInterp, q170OracleSql),
+    Q("q171_dp_counts", q171DpCounts, q171OracleSql),
+    Q("q173_bitmap_index", q173BitmapIndex, q173OracleSql),
+    Q("q174_ab_lift", q174AbLift, q174OracleSql),
+    Q("q175_gini", q175Gini, q175OracleSql),
+    Q("q176_weighted_median", q176WeightedMedian, q176OracleSql),
+    Q("q177_assoc_rules", q177AssocRules, q177OracleSql),
+    Q("q178_twap", q178Twap, q178OracleSql),
+    Q("q179_percentile_interp", q179PercentileInterp, q179OracleSql),
+    Q("q134_funnel", q134Funnel, q134OracleSql),
+    Q("q143_state_intervals", q143StateIntervals, q143OracleSql),
+    Q("q116_pareto_front", q116ParetoFront, q116OracleSql),
+    Q("q104_partition_stats", q104PartitionStats, q104OracleSql),
+    Q("q106_winsorize", q106Winsorize, q106OracleSql),
+    Q("q107_shipping_priority", q107ShippingPriority, q107OracleSql),
+    Q("q20_groupby_agg", q20GroupbyAgg,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
            AS sum_qty,
@@ -4081,31 +3988,31 @@ object Extensions {
            AS sum_price,
          min(l_extendedprice) AS min_price,
          max(l_extendedprice) AS max_price
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "q21_window_rank" ->
+         FROM lineitem GROUP BY l_returnflag, l_linestatus"""),
+    Q("q21_window_rank", q21WindowRank,
       """SELECT c_nationkey, c_custkey, c_name, c_acctbal FROM (
            SELECT c_nationkey, c_custkey, c_name, c_acctbal,
                   row_number() OVER (PARTITION BY c_nationkey
                     ORDER BY c_acctbal DESC, c_custkey) AS rn
-           FROM customer) WHERE rn = 1""",
-    "q22_semi_anti_join" ->
+           FROM customer) WHERE rn = 1"""),
+    Q("q22_semi_anti_join", q22SemiAntiJoin,
       """SELECT c_custkey, c_name FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders
                            WHERE o_custkey = c_custkey
-                             AND o_orderstatus = 'P')""",
-    "q23_dedup_exact" ->
+                             AND o_orderstatus = 'P')"""),
+    Q("q23_dedup_exact", q23DedupExact,
       """SELECT doc_id, lang, source, n_chars FROM (
            SELECT doc_id, lang, source, n_chars,
                   row_number() OVER (PARTITION BY text ORDER BY doc_id)
                     AS rn
-           FROM documents) WHERE rn = 1""",
-    "q24_text_stats" ->
+           FROM documents) WHERE rn = 1"""),
+    Q("q24_text_stats", q24TextStats,
       """SELECT lang, count(*) AS n_docs,
          CAST(sum(n_chars) AS BIGINT) AS sum_chars,
          min(n_chars) AS min_chars, max(n_chars) AS max_chars,
          CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS sum_words
-         FROM documents GROUP BY lang""",
-    "q25_topk_similarity" ->
+         FROM documents GROUP BY lang"""),
+    Q("q25_topk_similarity", q25TopkSimilarity,
       """WITH p AS (SELECT CAST(embedding AS DOUBLE[]) AS pv
                     FROM embeddings WHERE vec_id = 0)
          SELECT e.vec_id FROM embeddings e, p
@@ -4115,94 +4022,33 @@ object Extensions {
                                   CAST(e.embedding AS DOUBLE[])))
             * sqrt(list_dot_product(p.pv, p.pv))) DESC,
            e.vec_id
-         LIMIT 20""",
-    "q26_event_windows" ->
+         LIMIT 20"""),
+    Q("q26_event_windows", q26EventWindows,
       """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
          count(*) AS n,
          CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
            AS sum_value
-         FROM events GROUP BY 1, 2""",
-    "q27_json_extract" ->
+         FROM events GROUP BY 1, 2"""),
+    Q("q27_json_extract", q27JsonExtract,
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT)
-         AS k FROM events""",
-    "q28_setops" ->
+         AS k FROM events"""),
+    Q("q28_setops", q28Setops,
       """SELECT key, 'has_orders' AS tag FROM (
            SELECT c_custkey AS key FROM customer
            INTERSECT SELECT o_custkey FROM orders)
          UNION ALL
          SELECT key, 'no_orders' AS tag FROM (
            SELECT c_custkey AS key FROM customer
-           EXCEPT SELECT o_custkey FROM orders)""",
-    "q39_rollup" ->
+           EXCEPT SELECT o_custkey FROM orders)"""),
+    Q("q39_rollup", q39Rollup,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
            AS sum_qty
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "q40_cube" ->
+         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"""),
+    Q("q40_cube", q40Cube,
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n
-         FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""",
-    "q67_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-         count(*) AS n,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""",
-    "q68_map_funcs" ->
-      """SELECT event_id,
-         CAST(len(json_keys(props)) AS BIGINT) AS n_keys,
-         array_to_string(list_sort(json_keys(props)), ',') AS keys,
-         CAST(props->>'k' AS BIGINT) AS k_val,
-         CAST(props->>'k' AS BIGINT) * 2 AS k_doubled
-         FROM events""",
-    "q69_rank_family" ->
-      """SELECT c_custkey, c_nationkey,
-         CAST(ntile(4) OVER w AS BIGINT) AS tile,
-         percent_rank() OVER w AS pr,
-         cume_dist() OVER w AS cd
-         FROM customer
-         WINDOW w AS (PARTITION BY c_nationkey
-                      ORDER BY c_acctbal, c_custkey)""",
-    "q73_argminmax" ->
-      """SELECT c_nationkey,
-         arg_max(c_name, c_custkey) AS newest_name,
-         arg_min(c_name, c_custkey) AS oldest_name,
-         max(c_custkey) AS max_key
-         FROM customer GROUP BY c_nationkey""",
-    "q82_zscore_outliers" -> q82OracleSql,
-    "q83_histogram" -> q83OracleSql,
-    "q88_bloom_prune" -> q88OracleSql,
-    "q92_click_attribution" -> q92OracleSql,
-    "q335_multi_touch" -> q335OracleSql,
-    "q93_retention_cohorts" -> q93OracleSql,
-    "q123_bucketed_join" -> q123OracleSql,
-    "q94_mergeable_stats" -> q94OracleSql,
-    "q77_correlated_subquery" ->
-      """SELECT c_custkey,
-         (SELECT count(*) FROM orders o
-          WHERE o.o_custkey = c.c_custkey) AS n_orders
-         FROM customer c
-         WHERE EXISTS (SELECT 1 FROM orders o
-                       WHERE o.o_custkey = c.c_custkey
-                         AND o.o_orderstatus = 'P')""",
-    "q78_lateral" ->
-      """SELECT n.n_nationkey, t.c_custkey, t.c_acctbal
-         FROM nation n,
-         LATERAL (SELECT c_custkey, c_acctbal FROM customer c
-                  WHERE c.c_nationkey = n.n_nationkey
-                  ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t""",
-    "q74_sliding_windows" ->
-      """WITH assigned AS (
-           SELECT CAST(date_trunc('day', ts) AS DATE) AS win_start,
-                  event_type, value FROM events
-           UNION ALL
-           SELECT CAST(date_trunc('day', ts) AS DATE) - 1 AS win_start,
-                  event_type, value FROM events)
-         SELECT win_start, event_type, count(*) AS n,
-                CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-                  AS sum_value
-         FROM assigned GROUP BY win_start, event_type""",
-    "q41_sessionize" ->
+         FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)"""),
+    Q("q41_sessionize", q41Sessionize,
       """WITH e AS (SELECT user_id, date_trunc('second', ts) AS ts_s
                     FROM events),
          o AS (SELECT user_id, ts_s,
@@ -4217,8 +4063,68 @@ object Extensions {
                 FROM o)
          SELECT user_id, min(ts_s) AS session_start,
                 max(ts_s) AS session_end, count(*) AS n_events
-         FROM s2 GROUP BY user_id, sid""",
-    "q43_scalar_funcs" ->
+         FROM s2 GROUP BY user_id, sid"""),
+    Q("q67_grouping_sets", q67GroupingSets,
+      """SELECT l_returnflag, l_linestatus,
+         CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
+         count(*) AS n,
+         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+         FROM lineitem
+         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())"""),
+    Q("q68_map_funcs", q68MapFuncs,
+      """SELECT event_id,
+         CAST(len(json_keys(props)) AS BIGINT) AS n_keys,
+         array_to_string(list_sort(json_keys(props)), ',') AS keys,
+         CAST(props->>'k' AS BIGINT) AS k_val,
+         CAST(props->>'k' AS BIGINT) * 2 AS k_doubled
+         FROM events"""),
+    Q("q69_rank_family", q69RankFamily,
+      """SELECT c_custkey, c_nationkey,
+         CAST(ntile(4) OVER w AS BIGINT) AS tile,
+         percent_rank() OVER w AS pr,
+         cume_dist() OVER w AS cd
+         FROM customer
+         WINDOW w AS (PARTITION BY c_nationkey
+                      ORDER BY c_acctbal, c_custkey)"""),
+    Q("q73_argminmax", q73ArgMinMax,
+      """SELECT c_nationkey,
+         arg_max(c_name, c_custkey) AS newest_name,
+         arg_min(c_name, c_custkey) AS oldest_name,
+         max(c_custkey) AS max_key
+         FROM customer GROUP BY c_nationkey"""),
+    Q("q74_sliding_windows", q74SlidingWindows,
+      """WITH assigned AS (
+           SELECT CAST(date_trunc('day', ts) AS DATE) AS win_start,
+                  event_type, value FROM events
+           UNION ALL
+           SELECT CAST(date_trunc('day', ts) AS DATE) - 1 AS win_start,
+                  event_type, value FROM events)
+         SELECT win_start, event_type, count(*) AS n,
+                CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
+                  AS sum_value
+         FROM assigned GROUP BY win_start, event_type"""),
+    Q("q77_correlated_subquery", q77CorrelatedSubquery,
+      """SELECT c_custkey,
+         (SELECT count(*) FROM orders o
+          WHERE o.o_custkey = c.c_custkey) AS n_orders
+         FROM customer c
+         WHERE EXISTS (SELECT 1 FROM orders o
+                       WHERE o.o_custkey = c.c_custkey
+                         AND o.o_orderstatus = 'P')"""),
+    Q("q78_lateral", q78Lateral,
+      """SELECT n.n_nationkey, t.c_custkey, t.c_acctbal
+         FROM nation n,
+         LATERAL (SELECT c_custkey, c_acctbal FROM customer c
+                  WHERE c.c_nationkey = n.n_nationkey
+                  ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t"""),
+    Q("q82_zscore_outliers", q82ZscoreOutliers, q82OracleSql),
+    Q("q83_histogram", q83Histogram, q83OracleSql),
+    Q("q88_bloom_prune", q88BloomPrune, q88OracleSql),
+    Q("q92_click_attribution", q92ClickAttribution, q92OracleSql),
+    Q("q335_multi_touch", q335MultiTouch, q335OracleSql),
+    Q("q93_retention_cohorts", q93RetentionCohorts, q93OracleSql),
+    Q("q94_mergeable_stats", q94MergeableStats, q94OracleSql),
+    Q("q43_scalar_funcs", q43ScalarFuncs,
       """SELECT o_orderkey,
          upper(o_orderpriority) AS prio_upper,
          substring(o_orderpriority, 1, 1) AS prio_code,
@@ -4234,22 +4140,22 @@ object Extensions {
               WHEN o_orderstatus = 'O' THEN 'open'
               ELSE 'done' END AS status_word,
          coalesce(nullif(o_orderstatus, 'P'), '~') AS status_or_tilde
-         FROM orders""",
-    "q44_left_outer" ->
+         FROM orders"""),
+    Q("q44_left_outer", q44LeftOuter,
       """SELECT c_custkey, c_name, o_orderkey
          FROM customer LEFT JOIN
            (SELECT o_orderkey, o_custkey FROM orders
             WHERE o_orderstatus = 'P') p
-         ON c_custkey = p.o_custkey""",
-    "q45_full_outer" ->
+         ON c_custkey = p.o_custkey"""),
+    Q("q45_full_outer", q45FullOuter,
       """SELECT e.even_key, t.third_key FROM
            (SELECT c_custkey AS even_key FROM customer
             WHERE c_custkey % 2 = 0) e
          FULL OUTER JOIN
            (SELECT c_custkey AS third_key FROM customer
             WHERE c_custkey % 3 = 0) t
-         ON e.even_key = t.third_key""",
-    "q46_window_frames" ->
+         ON e.even_key = t.third_key"""),
+    Q("q46_window_frames", q46WindowFrames,
       """SELECT o_custkey, o_orderkey,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
            OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
@@ -4259,21 +4165,21 @@ object Extensions {
            ORDER BY o_orderdate, o_orderkey) AS prev_order,
          lead(o_orderkey, 1) OVER (PARTITION BY o_custkey
            ORDER BY o_orderdate, o_orderkey) AS next_order
-         FROM orders""",
-    "q47_approx_distinct" ->
+         FROM orders"""),
+    Q("q47_approx_distinct", q47ApproxDistinct,
       """SELECT o_orderpriority,
          CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_custs,
          TRUE AS within_5pct
-         FROM orders GROUP BY o_orderpriority""",
-    "q48_profile" ->
+         FROM orders GROUP BY o_orderpriority"""),
+    Q("q48_profile", q48Profile,
       """SELECT count(*) AS n_rows,
          CAST(sum(CASE WHEN c_name IS NULL THEN 1 ELSE 0 END) AS BIGINT)
            AS null_name,
          CAST(count(DISTINCT c_nationkey) AS BIGINT) AS n_nations,
          CAST(count(DISTINCT c_mktsegment) AS BIGINT) AS n_segments,
          min(c_custkey) AS min_key, max(c_custkey) AS max_key
-         FROM customer""",
-    "q49_pivot" ->
+         FROM customer"""),
+    Q("q49_pivot", q49Pivot,
       """SELECT o_orderpriority,
          CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END)
            AS BIGINT) AS n_p,
@@ -4281,18 +4187,18 @@ object Extensions {
            AS BIGINT) AS n_o,
          CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)
            AS BIGINT) AS n_f
-         FROM orders GROUP BY o_orderpriority""",
-    "q50_unpivot" ->
+         FROM orders GROUP BY o_orderpriority"""),
+    Q("q50_unpivot", q50Unpivot,
       """SELECT o_orderpriority, o_orderstatus, count(*) AS n
-         FROM orders GROUP BY o_orderpriority, o_orderstatus""",
-    "q51_explode" ->
+         FROM orders GROUP BY o_orderpriority, o_orderstatus"""),
+    Q("q51_explode", q51Explode,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS wl
                     FROM documents)
          SELECT doc_id,
                 CAST(unnest(range(1, len(wl) + 1)) AS BIGINT) AS pos,
                 unnest(wl) AS word
-         FROM w""",
-    "q53_date_funcs" ->
+         FROM w"""),
+    Q("q53_date_funcs", q53DateFuncs,
       """SELECT o_orderkey,
          CAST(o_orderdate AS DATE) AS o_date,
          CAST(o_orderdate AS DATE) + 7 AS plus_week,
@@ -4301,14 +4207,14 @@ object Extensions {
          last_day(CAST(o_orderdate AS DATE)) AS month_end,
          CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
          CAST(dayofweek(CAST(o_orderdate AS DATE)) + 1 AS BIGINT) AS dow
-         FROM orders""",
-    "q54_json_struct" ->
+         FROM orders"""),
+    Q("q54_json_struct", q54JsonStruct,
       """SELECT event_id,
          CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
          event_type AS etype,
          user_id % 100 AS user_mod
-         FROM events""",
-    "q55_array_funcs" ->
+         FROM events"""),
+    Q("q55_array_funcs", q55ArrayFuncs,
       """WITH g AS (SELECT label, list_sort(list(vec_id)) AS ids
                     FROM embeddings GROUP BY label)
          SELECT label,
@@ -4316,8 +4222,8 @@ object Extensions {
                 CAST(len(ids) AS BIGINT) AS n,
                 list_contains(ids, 0) AS has_probe,
                 ids[-1] AS max_id
-         FROM g""",
-    "q56_moments" ->
+         FROM g"""),
+    Q("q56_moments", q56Moments,
       """SELECT c_nationkey, count(*) AS n,
          CAST(sum(c_custkey) AS BIGINT) AS sum_k,
          CAST(sum(c_custkey * c_custkey) AS BIGINT) AS sum_k2,
@@ -4325,26 +4231,26 @@ object Extensions {
               - CAST(sum(c_custkey) AS HUGEINT) * sum(c_custkey))
               // (CAST(count(*) AS HUGEINT) * count(*)) AS BIGINT)
            AS var_floor
-         FROM customer GROUP BY c_nationkey""",
-    "q57_asof_join" ->
+         FROM customer GROUP BY c_nationkey"""),
+    Q("q57_asof_join", q57AsofJoin,
       """WITH o AS (SELECT o_custkey, o_orderdate,
                     max(o_orderkey) AS o_orderkey
                     FROM orders GROUP BY o_custkey, o_orderdate)
          SELECT e.event_id, o.o_orderkey
          FROM events e
          ASOF LEFT JOIN o ON e.user_id = o.o_custkey
-           AND date_trunc('second', e.ts) >= o.o_orderdate""",
-    "q58_range_join" ->
+           AND date_trunc('second', e.ts) >= o.o_orderdate"""),
+    Q("q58_range_join", q58RangeJoin,
       """WITH bands AS (
            SELECT CAST(band AS BIGINT) AS band,
                   band * 250.0 AS lo, (band + 1) * 250.0 AS hi
            FROM (SELECT unnest(range(0, 8)) AS band))
          SELECT p_partkey, band FROM part JOIN bands
-         ON p_retailprice >= lo AND p_retailprice < hi""",
-    "q60_percentiles" ->
+         ON p_retailprice >= lo AND p_retailprice < hi"""),
+    Q("q60_percentiles", q60Percentiles,
       """SELECT c_nationkey,
          quantile_cont(c_custkey, 0.25) AS p25,
          quantile_cont(c_custkey, 0.5) AS p50,
          quantile_cont(c_custkey, 0.9) AS p90
-         FROM customer GROUP BY c_nationkey""")
+         FROM customer GROUP BY c_nationkey"""))
 }

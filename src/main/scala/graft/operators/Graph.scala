@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.sources.Tables
 
 /** Iterative graph analytics beyond connected components: PageRank by
@@ -1163,33 +1164,18 @@ object Graph {
           n_reciprocal * 1000000 // n_edges AS reciprocity_ppm
         FROM n CROSS JOIN recip"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q485_degree_distribution" -> (q485DegreeDistribution _),
-    "q488_graph_reciprocity" -> (q488GraphReciprocity _),
-    "q463_katz_centrality" -> (q463KatzCentrality _),
-    "q385_personalized_pagerank" -> (q385PersonalizedPagerank _),
-    "q365_hits" -> (q365Hits _),
-    "q282_clustering_coeff" -> (q282ClusteringCoeff _),
-    "q261_harmonic_2hop" -> (q261Harmonic2Hop _),
-    "q234_sssp" -> (q234Sssp _),
-    "q99_pagerank" -> (q99PageRank _),
-    "q105_triangle_count" -> (q105TriangleCount _),
-    "q131_reachability" -> (q131Reachability _),
-    "q147_label_propagation" -> (q147LabelPropagation _),
-    "q155_kcore" -> (q155KCore _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q485_degree_distribution" -> q485OracleSql,
-    "q488_graph_reciprocity" -> q488OracleSql,
-    "q463_katz_centrality" -> q463OracleSql,
-    "q385_personalized_pagerank" -> q385OracleSql,
-    "q365_hits" -> q365OracleSql,
-    "q282_clustering_coeff" -> q282OracleSql,
-    "q261_harmonic_2hop" -> q261OracleSql,
-    "q234_sssp" -> q234OracleSql,
-    "q99_pagerank" -> q99OracleSql,
-    "q105_triangle_count" -> q105OracleSql,
-    "q131_reachability" -> q131OracleSql,
-    "q147_label_propagation" -> q147OracleSql,
-    "q155_kcore" -> q155OracleSql)
+  val registry: Seq[Q] = Seq(
+    Q("q485_degree_distribution", q485DegreeDistribution, q485OracleSql),
+    Q("q488_graph_reciprocity", q488GraphReciprocity, q488OracleSql),
+    Q("q463_katz_centrality", q463KatzCentrality, q463OracleSql),
+    Q("q385_personalized_pagerank", q385PersonalizedPagerank, q385OracleSql),
+    Q("q365_hits", q365Hits, q365OracleSql),
+    Q("q282_clustering_coeff", q282ClusteringCoeff, q282OracleSql),
+    Q("q261_harmonic_2hop", q261Harmonic2Hop, q261OracleSql),
+    Q("q234_sssp", q234Sssp, q234OracleSql),
+    Q("q99_pagerank", q99PageRank, q99OracleSql),
+    Q("q105_triangle_count", q105TriangleCount, q105OracleSql),
+    Q("q131_reachability", q131Reachability, q131OracleSql),
+    Q("q147_label_propagation", q147LabelPropagation, q147OracleSql),
+    Q("q155_kcore", q155KCore, q155OracleSql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.sources.Tables
 
 /** One opaque media payload with typed metadata. `payload` stays an
@@ -2089,47 +2090,25 @@ object Multimodal {
           md5(array_to_string(fr, '')) AS frames_md5
         FROM f"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q516_avi_frame_index" -> (q516AviFrameIndex _),
-    "q511_png_decode" -> (q511PngDecode _),
-    "q509_wav_decode" -> (q509WavDecode _),
-    "q507_pixel_decode" -> (q507PixelDecode _),
-    "q476_media_kind_mislabel" -> (q476MediaKindMislabel _),
-    "q489_metadata_consistency" -> (q489MetadataConsistency _),
-    "q310_aspect_buckets" -> (q310AspectBuckets _),
-    "q285_frame_dedup" -> (q285FrameDedup _),
-    "q270_payload_collision" -> (q270PayloadCollision _),
-    "q254_silence_segments" -> (q254SilenceSegments _),
-    "q231_payload_phash" -> (q231PayloadPhash _),
-    "q366_phash_clusters" -> (q366PhashClusters _),
-    "q220_hist_equalize" -> (q220HistEqualize _),
-    "q216_cdc_chunk_dedup" -> (q216CdcChunkDedup _),
-    "q118_resize_meta" -> (q118ResizeMeta _),
-    "q148_shot_boundaries" -> (q148ShotBoundaries _),
-    "q115_frame_sample" -> (q115FrameSample _),
-    "q38_multimodal_meta" -> (q38MultimodalMeta _),
-    "q454_payload_rle" -> (q454PayloadRle _),
-    "q81_media_histogram" -> (q81MediaHistogram _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q516_avi_frame_index" -> q516OracleSql,
-    "q511_png_decode" -> q511OracleSql,
-    "q509_wav_decode" -> q509OracleSql,
-    "q507_pixel_decode" -> q507OracleSql,
-    "q454_payload_rle" -> q454OracleSql,
-    "q476_media_kind_mislabel" -> q476OracleSql,
-    "q489_metadata_consistency" -> q489OracleSql,
-    "q310_aspect_buckets" -> q310OracleSql,
-    "q285_frame_dedup" -> q285OracleSql,
-    "q270_payload_collision" -> q270OracleSql,
-    "q254_silence_segments" -> q254OracleSql,
-    "q231_payload_phash" -> q231OracleSql,
-    "q366_phash_clusters" -> q366OracleSql,
-    "q220_hist_equalize" -> q220OracleSql,
-    "q216_cdc_chunk_dedup" -> q216OracleSql,
-    "q118_resize_meta" -> q118OracleSql,
-    "q115_frame_sample" -> q115OracleSql,
-    "q148_shot_boundaries" -> q148OracleSql,
-    "q38_multimodal_meta" -> q38OracleSql,
-    "q81_media_histogram" -> q81OracleSql)
+  val registry: Seq[Q] = Seq(
+    Q("q516_avi_frame_index", q516AviFrameIndex, q516OracleSql),
+    Q("q511_png_decode", q511PngDecode, q511OracleSql),
+    Q("q509_wav_decode", q509WavDecode, q509OracleSql),
+    Q("q507_pixel_decode", q507PixelDecode, q507OracleSql),
+    Q("q476_media_kind_mislabel", q476MediaKindMislabel, q476OracleSql),
+    Q("q489_metadata_consistency", q489MetadataConsistency, q489OracleSql),
+    Q("q310_aspect_buckets", q310AspectBuckets, q310OracleSql),
+    Q("q285_frame_dedup", q285FrameDedup, q285OracleSql),
+    Q("q270_payload_collision", q270PayloadCollision, q270OracleSql),
+    Q("q254_silence_segments", q254SilenceSegments, q254OracleSql),
+    Q("q231_payload_phash", q231PayloadPhash, q231OracleSql),
+    Q("q366_phash_clusters", q366PhashClusters, q366OracleSql),
+    Q("q220_hist_equalize", q220HistEqualize, q220OracleSql),
+    Q("q216_cdc_chunk_dedup", q216CdcChunkDedup, q216OracleSql),
+    Q("q118_resize_meta", q118ResizeMeta, q118OracleSql),
+    Q("q148_shot_boundaries", q148ShotBoundaries, q148OracleSql),
+    Q("q115_frame_sample", q115FrameSample, q115OracleSql),
+    Q("q38_multimodal_meta", q38MultimodalMeta, q38OracleSql),
+    Q("q454_payload_rle", q454PayloadRle, q454OracleSql),
+    Q("q81_media_histogram", q81MediaHistogram, q81OracleSql))
 }

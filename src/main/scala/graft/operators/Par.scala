@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.util.concurrent.Executors
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -21,23 +22,43 @@ import org.apache.spark.sql.DataFrame
   * core-count tune.
   *
   * Semantics are unchanged: each frame is the same eager
-  * localCheckpoint it was before, just submitted concurrently.
-  * Failures propagate (Await rethrows), so an error in any branch
-  * still fails the query loudly.
+  * localCheckpoint it was before, just submitted concurrently. The
+  * branches share one job group; the first branch to fail cancels the
+  * group's running and not-yet-submitted jobs (interrupting their
+  * tasks), the call waits until every branch has returned, and then
+  * rethrows that first failure — so an error fails the query loudly
+  * and leaves no orphaned sibling job running behind it.
   */
 private[graft] object Par {
+
+  private val groups = new AtomicLong()
 
   /** Eagerly localCheckpoint every frame, all in flight at once.
     * Returns the checkpointed frames in input order. */
   def checkpointAll(dfs: DataFrame*): Seq[DataFrame] = {
     if (dfs.sizeIs <= 1) dfs.map(_.localCheckpoint(true)).toSeq
     else {
+      val sc = dfs.head.sparkSession.sparkContext
+      val group = s"graft-par-${groups.incrementAndGet()}"
+      val desc = Option(sc.getLocalProperty("spark.job.description"))
+        .getOrElse(group)
+      val failure = new AtomicReference[Throwable]()
       val pool = Executors.newFixedThreadPool(dfs.size)
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutor(pool)
       try {
-        val fs = dfs.map(df => Future(df.localCheckpoint(true)))
-        fs.map(Await.result(_, Duration.Inf)).toSeq
+        val fs = dfs.map(df => Future {
+          sc.setJobGroup(group, desc, interruptOnCancel = true)
+          try df.localCheckpoint(true)
+          catch { case e: Throwable =>
+            if (failure.compareAndSet(null, e))
+              sc.cancelJobGroupAndFutureJobs(group, s"sibling failed: $e")
+            throw e
+          }
+        })
+        fs.foreach(Await.ready(_, Duration.Inf))
+        Option(failure.get).foreach(e => throw e)
+        fs.map(_.value.get.get).toSeq
       } finally pool.shutdown()
     }
   }

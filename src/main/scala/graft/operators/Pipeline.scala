@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
+import graft.Q
 import graft.functions.PortableHash._
 import graft.sources.Tables
 
@@ -39,7 +39,6 @@ object Pipeline {
     * exact duplicates in the same split — id-based or random splits leak
     * dup pairs across train/test. */
   def q62HashSplit(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     t(s, dir, "documents")
       .select(col("doc_id"),
         expr("poly_hash(text) % 100").as("bucket"))
@@ -206,7 +205,6 @@ object Pipeline {
     * the surviving rows. This is the daily-ingest shape: work scales
     * with the batch, not the corpus. */
   def q75IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val all = t(s, dir, "documents")
       .select(col("doc_id"), expr("poly_hash(text)").as("fp"))
     val corpusFps = all.filter(col("doc_id") < 250L).select("fp")
@@ -265,7 +263,6 @@ object Pipeline {
     * the benchmark. Documents shorter than 5 tokens have no 5-grams and
     * always survive — both engines agree by construction. */
   def q84Decontaminate(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val docs = t(s, dir, "documents").select("doc_id", "text")
     decontaminate(
       docs.filter(col("doc_id") % 10 =!= 0),
@@ -313,7 +310,6 @@ object Pipeline {
     * (same property as q62's split) and membership is stable under
     * re-runs and re-partitioning, unlike `df.sample`. */
   def q85StratifiedSample(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val docs = t(s, dir, "documents")
     val rates = docs.groupBy("lang")
       .agg(count(lit(1)).as("cnt"))
@@ -350,7 +346,6 @@ object Pipeline {
   def prepareCorpus(
       spark: SparkSession, docs: DataFrame, out: Option[String] = None)
       : DataFrame = {
-    graft.functions.GraftFunctions.registerAll(spark)
     // 1. quality gate: enough tokens, no degenerate repetition
     val gated = docs
       .withColumn("pc_ws", split(col("text"), " "))
@@ -1448,7 +1443,6 @@ object Pipeline {
     * (TakeOrderedAndProject — K rows per partition cross the wire). One
     * scan, no shuffle beyond the K-row gather. */
   def q237WeightedSample(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars").as("weight"),
         expr("""(poly_hash(text) % 1000003) * 1000000
@@ -2144,7 +2138,6 @@ object Pipeline {
     * \|strata\|·k partial rows. */
   def q398BottomkSample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.registerAll(s)
     val prio = t(s, dir, "documents")
       .select(col("lang"), col("doc_id").as("id"),
         // negated: TopKByScore keeps the HIGHEST scores (ties → lower
@@ -2193,7 +2186,6 @@ object Pipeline {
     * construction. At corpus scale the legs shard (BM25 by posting,
     * ANN by cell) and the fusion cost stays |results|, not |corpus|. */
   def q402HybridRetrieval(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val bm25 = bm25TopK(t(s, dir, "documents"), Bm25Terms, Bm25TopK)
       .select(col("doc_id"), col("rank").as("bm25_rank"))
     val e = t(s, dir, "embeddings")
@@ -3008,105 +3000,54 @@ object Pipeline {
             AS imbalance_milli
         FROM g CROSS JOIN nl CROSS JOIN ns"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q479_incremental_card" -> (q479IncrementalCard _),
-    "q487_coverage_matrix" -> (q487CoverageMatrix _),
-    "q475_bm25_param_sweep" -> (q475Bm25ParamSweep _),
-    "q470_stage_reconciliation" -> (q470StageReconciliation _),
-    "q462_skew_report" -> (q462SkewReport _),
-    "q456_dataset_card" -> (q456DatasetCard _),
-    "q457_temporal_split" -> (q457TemporalSplit _),
-    "q449_join_cardinality" -> (q449JoinCardinality _),
-    "q439_bloom_sizing" -> (q439BloomSizing _),
-    "q440_compaction_planner" -> (q440CompactionPlanner _),
-    "q424_selectivity_audit" -> (q424SelectivityAudit _),
-    "q402_hybrid_retrieval" -> (q402HybridRetrieval _),
-    "q398_bottomk_sample" -> (q398BottomkSample _),
-    "q292_neyman_allocation" -> (q292NeymanAllocation _),
-    "q289_fold_balance_audit" -> (q289FoldBalanceAudit _),
-    "q280_quality_knapsack" -> (q280QualityKnapsack _),
-    "q274_hash_cross_audit" -> (q274HashCrossAudit _),
-    "q273_erasure_audit" -> (q273ErasureAudit _),
-    "q263_stratified_folds" -> (q263StratifiedFolds _),
-    "q260_quota_allocate" -> (q260QuotaAllocate _),
-    "q250_padding_waste" -> (q250PaddingWaste _),
-    "q251_consistent_hash" -> (q251ConsistentHash _),
-    "q238_fk_integrity" -> (q238FkIntegrity _),
-    "q237_weighted_sample" -> (q237WeightedSample _),
-    "q228_quantile_normalize" -> (q228QuantileNormalize _),
-    "q223_rrf_fusion" -> (q223RrfFusion _),
-    "q225_effective_sources" -> (q225EffectiveSources _),
-    "q221_dense_ids" -> (q221DenseIds _),
-    "q159_systematic_sample" -> (q159SystematicSample _),
-    "q165_rank_transform" -> (q165RankTransform _),
-    "q166_incremental_agg" -> (q166IncrementalAgg _),
-    "q172_shard_assign" -> (q172ShardAssign _),
-    "q151_token_budget" -> (q151TokenBudget _),
-    "q103_merge_upsert" -> (q103MergeUpsert _),
-    "q130_quality_constraints" -> (q130QualityConstraints _),
-    "q135_mixture_apply" -> (q135MixtureApply _),
-    "q138_snapshot_diff" -> (q138SnapshotDiff _),
-    "q141_group_sample" -> (q141GroupSample _),
-    "q145_merkle_diff" -> (q145MerkleDiff _),
-    "q95_pack_sequences" -> (q95PackSequences _),
-    "q97_mixture_weights" -> (q97MixtureWeights _),
-    "q62_hash_split" -> (q62HashSplit _),
-    "q64_bm25_topk" -> (q64Bm25TopK _),
-    "q65_salted_join" -> (q65SaltedJoin _),
-    "q66_approx_quantile" -> (q66ApproxQuantile _),
-    "q75_incremental_dedup" -> (q75IncrementalDedup _),
-    "q79_prepare_corpus" -> (q79PrepareCorpus _),
-    "q84_decontaminate" -> (q84Decontaminate _),
-    "q85_stratified_sample" -> (q85StratifiedSample _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q398_bottomk_sample" -> q398OracleSql,
-    "q479_incremental_card" -> q479OracleSql,
-    "q487_coverage_matrix" -> q487OracleSql,
-    "q475_bm25_param_sweep" -> q475OracleSql,
-    "q470_stage_reconciliation" -> q470OracleSql,
-    "q462_skew_report" -> q462OracleSql,
-    "q456_dataset_card" -> q456OracleSql,
-    "q457_temporal_split" -> q457OracleSql,
-    "q449_join_cardinality" -> q449OracleSql,
-    "q439_bloom_sizing" -> q439OracleSql,
-    "q440_compaction_planner" -> q440OracleSql,
-    "q424_selectivity_audit" -> q424OracleSql,
-    "q402_hybrid_retrieval" -> q402OracleSql,
-    "q292_neyman_allocation" -> q292OracleSql,
-    "q289_fold_balance_audit" -> q289OracleSql,
-    "q280_quality_knapsack" -> q280OracleSql,
-    "q274_hash_cross_audit" -> q274OracleSql,
-    "q273_erasure_audit" -> q273OracleSql,
-    "q263_stratified_folds" -> q263OracleSql,
-    "q260_quota_allocate" -> q260OracleSql,
-    "q250_padding_waste" -> q250OracleSql,
-    "q251_consistent_hash" -> q251OracleSql,
-    "q238_fk_integrity" -> q238OracleSql,
-    "q237_weighted_sample" -> q237OracleSql,
-    "q228_quantile_normalize" -> q228OracleSql,
-    "q223_rrf_fusion" -> q223OracleSql,
-    "q225_effective_sources" -> q225OracleSql,
-    "q221_dense_ids" -> q221OracleSql,
-    "q151_token_budget" -> q151OracleSql,
-    "q159_systematic_sample" -> q159OracleSql,
-    "q165_rank_transform" -> q165OracleSql,
-    "q166_incremental_agg" -> q166OracleSql,
-    "q172_shard_assign" -> q172OracleSql,
-    "q103_merge_upsert" -> q103OracleSql,
-    "q130_quality_constraints" -> q130OracleSql,
-    "q135_mixture_apply" -> q135OracleSql,
-    "q138_snapshot_diff" -> q138OracleSql,
-    "q141_group_sample" -> q141OracleSql,
-    "q145_merkle_diff" -> q145OracleSql,
-    "q95_pack_sequences" -> q95OracleSql,
-    "q97_mixture_weights" -> q97OracleSql,
-    "q62_hash_split" -> q62OracleSql,
-    "q64_bm25_topk" -> q64OracleSql,
-    "q65_salted_join" -> q65OracleSql,
-    "q66_approx_quantile" -> q66OracleSql,
-    "q75_incremental_dedup" -> q75OracleSql,
-    "q79_prepare_corpus" -> q79OracleSql,
-    "q84_decontaminate" -> q84OracleSql,
-    "q85_stratified_sample" -> q85OracleSql)
+  val registry: Seq[Q] = Seq(
+    Q("q479_incremental_card", q479IncrementalCard, q479OracleSql),
+    Q("q487_coverage_matrix", q487CoverageMatrix, q487OracleSql),
+    Q("q475_bm25_param_sweep", q475Bm25ParamSweep, q475OracleSql),
+    Q("q470_stage_reconciliation", q470StageReconciliation, q470OracleSql),
+    Q("q462_skew_report", q462SkewReport, q462OracleSql),
+    Q("q456_dataset_card", q456DatasetCard, q456OracleSql),
+    Q("q457_temporal_split", q457TemporalSplit, q457OracleSql),
+    Q("q449_join_cardinality", q449JoinCardinality, q449OracleSql),
+    Q("q439_bloom_sizing", q439BloomSizing, q439OracleSql),
+    Q("q440_compaction_planner", q440CompactionPlanner, q440OracleSql),
+    Q("q424_selectivity_audit", q424SelectivityAudit, q424OracleSql),
+    Q("q402_hybrid_retrieval", q402HybridRetrieval, q402OracleSql),
+    Q("q398_bottomk_sample", q398BottomkSample, q398OracleSql),
+    Q("q292_neyman_allocation", q292NeymanAllocation, q292OracleSql),
+    Q("q289_fold_balance_audit", q289FoldBalanceAudit, q289OracleSql),
+    Q("q280_quality_knapsack", q280QualityKnapsack, q280OracleSql),
+    Q("q274_hash_cross_audit", q274HashCrossAudit, q274OracleSql),
+    Q("q273_erasure_audit", q273ErasureAudit, q273OracleSql),
+    Q("q263_stratified_folds", q263StratifiedFolds, q263OracleSql),
+    Q("q260_quota_allocate", q260QuotaAllocate, q260OracleSql),
+    Q("q250_padding_waste", q250PaddingWaste, q250OracleSql),
+    Q("q251_consistent_hash", q251ConsistentHash, q251OracleSql),
+    Q("q238_fk_integrity", q238FkIntegrity, q238OracleSql),
+    Q("q237_weighted_sample", q237WeightedSample, q237OracleSql),
+    Q("q228_quantile_normalize", q228QuantileNormalize, q228OracleSql),
+    Q("q223_rrf_fusion", q223RrfFusion, q223OracleSql),
+    Q("q225_effective_sources", q225EffectiveSources, q225OracleSql),
+    Q("q221_dense_ids", q221DenseIds, q221OracleSql),
+    Q("q159_systematic_sample", q159SystematicSample, q159OracleSql),
+    Q("q165_rank_transform", q165RankTransform, q165OracleSql),
+    Q("q166_incremental_agg", q166IncrementalAgg, q166OracleSql),
+    Q("q172_shard_assign", q172ShardAssign, q172OracleSql),
+    Q("q151_token_budget", q151TokenBudget, q151OracleSql),
+    Q("q103_merge_upsert", q103MergeUpsert, q103OracleSql),
+    Q("q130_quality_constraints", q130QualityConstraints, q130OracleSql),
+    Q("q135_mixture_apply", q135MixtureApply, q135OracleSql),
+    Q("q138_snapshot_diff", q138SnapshotDiff, q138OracleSql),
+    Q("q141_group_sample", q141GroupSample, q141OracleSql),
+    Q("q145_merkle_diff", q145MerkleDiff, q145OracleSql),
+    Q("q95_pack_sequences", q95PackSequences, q95OracleSql),
+    Q("q97_mixture_weights", q97MixtureWeights, q97OracleSql),
+    Q("q62_hash_split", q62HashSplit, q62OracleSql),
+    Q("q64_bm25_topk", q64Bm25TopK, q64OracleSql),
+    Q("q65_salted_join", q65SaltedJoin, q65OracleSql),
+    Q("q66_approx_quantile", q66ApproxQuantile, q66OracleSql),
+    Q("q75_incremental_dedup", q75IncrementalDedup, q75OracleSql),
+    Q("q79_prepare_corpus", q79PrepareCorpus, q79OracleSql),
+    Q("q84_decontaminate", q84Decontaminate, q84OracleSql),
+    Q("q85_stratified_sample", q85StratifiedSample, q85OracleSql))
 }

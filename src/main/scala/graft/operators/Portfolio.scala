@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.sources.Tables
 
 /** TPC-H join-shape portfolio COMPLETION (q370–q380): with the eleven
@@ -788,36 +789,20 @@ object Portfolio {
             AS BIGINT) AS rev_share_ppm
         FROM labeled GROUP BY cls"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q486_abc_classification" -> (q486AbcClassification _),
-    "q472_yoy_growth" -> (q472YoyGrowth _),
-    "q473_price_volume_decomposition" ->
-      (q473PriceVolumeDecomposition _),
-    "q370_min_cost_supplier" -> (q370MinCostSupplier _),
-    "q371_priority_check" -> (q371PriorityCheck _),
-    "q372_forecast_revenue" -> (q372ForecastRevenue _),
-    "q373_product_profit" -> (q373ProductProfit _),
-    "q374_important_parts" -> (q374ImportantParts _),
-    "q375_return_priority_mix" -> (q375ReturnPriorityMix _),
-    "q376_custdist" -> (q376CustDist _),
-    "q377_top_supplier" -> (q377TopSupplier _),
-    "q378_supplier_counts" -> (q378SupplierCounts _),
-    "q379_excess_suppliers" -> (q379ExcessSuppliers _),
-    "q380_sole_failing_supplier" -> (q380SoleFailingSupplier _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q486_abc_classification" -> q486OracleSql,
-    "q472_yoy_growth" -> q472OracleSql,
-    "q473_price_volume_decomposition" -> q473OracleSql,
-    "q370_min_cost_supplier" -> q370OracleSql,
-    "q371_priority_check" -> q371OracleSql,
-    "q372_forecast_revenue" -> q372OracleSql,
-    "q373_product_profit" -> q373OracleSql,
-    "q374_important_parts" -> q374OracleSql,
-    "q375_return_priority_mix" -> q375OracleSql,
-    "q376_custdist" -> q376OracleSql,
-    "q377_top_supplier" -> q377OracleSql,
-    "q378_supplier_counts" -> q378OracleSql,
-    "q379_excess_suppliers" -> q379OracleSql,
-    "q380_sole_failing_supplier" -> q380OracleSql)
+  val registry: Seq[Q] = Seq(
+    Q("q486_abc_classification", q486AbcClassification, q486OracleSql),
+    Q("q472_yoy_growth", q472YoyGrowth, q472OracleSql),
+    Q("q473_price_volume_decomposition", q473PriceVolumeDecomposition,
+      q473OracleSql),
+    Q("q370_min_cost_supplier", q370MinCostSupplier, q370OracleSql),
+    Q("q371_priority_check", q371PriorityCheck, q371OracleSql),
+    Q("q372_forecast_revenue", q372ForecastRevenue, q372OracleSql),
+    Q("q373_product_profit", q373ProductProfit, q373OracleSql),
+    Q("q374_important_parts", q374ImportantParts, q374OracleSql),
+    Q("q375_return_priority_mix", q375ReturnPriorityMix, q375OracleSql),
+    Q("q376_custdist", q376CustDist, q376OracleSql),
+    Q("q377_top_supplier", q377TopSupplier, q377OracleSql),
+    Q("q378_supplier_counts", q378SupplierCounts, q378OracleSql),
+    Q("q379_excess_suppliers", q379ExcessSuppliers, q379OracleSql),
+    Q("q380_sole_failing_supplier", q380SoleFailingSupplier, q380OracleSql))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{register, vec_dot}
+import graft.Q
+import graft.functions.VectorFunctions.vec_dot
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over the embeddings column.
@@ -36,7 +37,6 @@ object Similarity {
 
   /** Embeddings with double-cast vectors and precomputed norms. */
   private[graft] def vectors(s: SparkSession, dir: String): DataFrame = {
-    register(s)
     t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))
@@ -73,7 +73,6 @@ object Similarity {
     centroidRow(e, NumCentroids)
 
   private[graft] def centroidRow(e: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(e.sparkSession)
     e.filter(col("vec_id") < k)
       .agg(array_sort(collect_list(struct(
         col("vec_id").as("cent_id"), col("ed").as("ced"),
@@ -435,7 +434,6 @@ object Similarity {
     * carries ONE 2145-long buffer per map partition instead of
     * n·2080 rows. */
   private def gramMomentsRow(vecs: DataFrame, vcol: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(vecs.sparkSession)
     // n > 0 guard: a no-GROUP-BY TypedImperativeAggregate always emits
     // one row, so an EMPTY relation would yield an all-zero buffer —
     // the replaced explode+groupBy form (and the DuckDB oracles)
@@ -495,7 +493,6 @@ object Similarity {
     * q29's IVF cell restriction; recall grows with fewer planes or
     * multi-probe across neighboring buckets). */
   def q52AnnLsh(s: SparkSession, dir: String): DataFrame = {
-    register(s)
     val bucketTerms = (0 until Dedup.NumPlanes).map { p =>
       s"(CASE WHEN vec_dot(ed, ${planeLitSpark(p)}) >= 0D " +
         s"THEN ${1 << p} ELSE 0 END)"
@@ -549,7 +546,6 @@ object Similarity {
     * TopKAggregator.scala). */
   def q42TopkPerLabel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    register(s)
     val e = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))
@@ -692,7 +688,6 @@ object Similarity {
     * broadcast one-row in-row argmax as q29 — zero corpus shuffle —
     * and the confusion matrix is O(labels²). */
   def q111KmeansRefine(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val e = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))
@@ -860,7 +855,6 @@ object Similarity {
     * partition); stage 2 is a window over $RerankPool rows — the
     * corpus is never shuffled, never joined pairwise. */
   def q128RerankAnn(s: SparkSession, dir: String): DataFrame = {
-    register(s)
     val e = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))
@@ -2921,86 +2915,47 @@ object Similarity {
           CAST(count(*) AS BIGINT) * 1000000 // max(g.n) AS share_ppm
         FROM b CROSS JOIN g GROUP BY bucket"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q450_rayleigh_certificate" -> (q450RayleighCertificate _),
-    "q461_embedding_mmd" -> (q461EmbeddingMmd _),
-    "q495_embedding_norm_audit" -> (q495EmbeddingNormAudit _),
-    "q351_power_iteration" -> (q351PowerIteration _),
-    "q344_cka_prefix" -> (q344CkaPrefix _),
-    "q334_class_separability" -> (q334ClassSeparability _),
-    "q327_matryoshka_eval" -> (q327MatryoshkaEval _),
-    "q323_centroid_drift" -> (q323SourceCentroidDrift _),
-    "q324_pq_assign" -> (q324PqAssign _),
-    "q510_pq_adc_topk" -> (q510PqAdcTopk _),
-    "q512_ivf_pq_search" -> (q512IvfPqSearch _),
-    "q315_effective_rank" -> (q315EffectiveRank _),
-    "q293_dimension_audit" -> (q293DimensionAudit _),
-    "q257_ndcg_eval" -> (q257NdcgEval _),
-    "q381_map_eval" -> (q381MapEval _),
-    "q434_rbp_eval" -> (q434Rbp _),
-    "q435_err_eval" -> (q435Err _),
-    "q249_silhouette" -> (q249Silhouette _),
-    "q246_cohens_kappa" -> (q246CohensKappa _),
-    "q241_knn_classify" -> (q241KnnClassify _),
-    "q235_random_projection" -> (q235RandomProjection _),
-    "q227_margin_knn" -> (q227MarginKnn _),
-    "q153_ann_eval" -> (q153AnnEval _),
-    "q215_mrr_eval" -> (q215MrrEval _),
-    "q154_gram_matrix" -> (q154GramMatrix _),
-    "q111_kmeans_refine" -> (q111KmeansRefine _),
+  val registry: Seq[Q] = Seq(
+    Q("q450_rayleigh_certificate", q450RayleighCertificate, q450OracleSql),
+    Q("q461_embedding_mmd", q461EmbeddingMmd, q461OracleSql),
+    Q("q495_embedding_norm_audit", q495EmbeddingNormAudit, q495OracleSql),
+    Q("q351_power_iteration", q351PowerIteration, q351OracleSql),
+    Q("q344_cka_prefix", q344CkaPrefix, q344OracleSql),
+    Q("q334_class_separability", q334ClassSeparability, q334OracleSql),
+    Q("q327_matryoshka_eval", q327MatryoshkaEval, q327OracleSql),
+    Q("q323_centroid_drift", q323SourceCentroidDrift, q323OracleSql),
+    Q("q324_pq_assign", q324PqAssign, q324OracleSql),
+    Q("q510_pq_adc_topk", q510PqAdcTopk, q510OracleSql),
+    Q("q512_ivf_pq_search", q512IvfPqSearch, q512OracleSql),
+    Q("q315_effective_rank", q315EffectiveRank, q315OracleSql),
+    Q("q293_dimension_audit", q293DimensionAudit, q293OracleSql),
+    Q("q257_ndcg_eval", q257NdcgEval, q257OracleSql),
+    Q("q381_map_eval", q381MapEval, q381OracleSql),
+    Q("q434_rbp_eval", q434Rbp, q434OracleSql),
+    Q("q435_err_eval", q435Err, q435OracleSql),
+    Q("q249_silhouette", q249Silhouette, q249OracleSql),
+    Q("q246_cohens_kappa", q246CohensKappa, q246OracleSql),
+    Q("q241_knn_classify", q241KnnClassify, q241OracleSql),
+    Q("q235_random_projection", q235RandomProjection, q235OracleSql),
+    Q("q227_margin_knn", q227MarginKnn, q227OracleSql),
+    Q("q153_ann_eval", q153AnnEval, q153OracleSql),
+    Q("q215_mrr_eval", q215MrrEval, q215OracleSql),
+    Q("q154_gram_matrix", q154GramMatrix, q154OracleSql),
+    Q("q111_kmeans_refine", q111KmeansRefine, q111OracleSql),
     // round 11: the DECLARED query now applies the k ∝ n rule too —
     // the oracle carries the same greatest(16, n div 128) bound, so
     // the differential follows the geometry at every SF (at sf ≤ 0.1
     // the bound floors to the legacy 16, so results and baselines are
     // unchanged there; the sf10 endurance run is what forced this —
     // fixed k=16 measured 287 s / raw exp 1.84)
-    "q127_semdedup" -> ((s: SparkSession, d: String) =>
-      q127Semdedup(s, d)),
-    "q128_rerank_ann" -> (q128RerankAnn _),
-    "q133_mmr_select" -> (q133MmrSelect _),
-    "q120_multiprobe_ann" -> (q120MultiprobeAnn _),
-    "q29_ann_ivf" -> (q29AnnIvf _),
-    "q42_topk_per_label" -> (q42TopkPerLabel _),
-    "q52_ann_lsh" -> (q52AnnLsh _),
-    "q76_batch_ann" -> (q76BatchAnn _),
-    "q86_label_centroids" -> (q86LabelCentroids _),
-    "q91_quantize_embeddings" -> (q91QuantizeEmbeddings _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q450_rayleigh_certificate" -> q450OracleSql,
-    "q461_embedding_mmd" -> q461OracleSql,
-    "q495_embedding_norm_audit" -> q495OracleSql,
-    "q344_cka_prefix" -> q344OracleSql,
-    "q351_power_iteration" -> q351OracleSql,
-    "q334_class_separability" -> q334OracleSql,
-    "q327_matryoshka_eval" -> q327OracleSql,
-    "q323_centroid_drift" -> q323OracleSql,
-    "q324_pq_assign" -> q324OracleSql,
-    "q510_pq_adc_topk" -> q510OracleSql,
-    "q512_ivf_pq_search" -> q512OracleSql,
-    "q315_effective_rank" -> q315OracleSql,
-    "q293_dimension_audit" -> q293OracleSql,
-    "q257_ndcg_eval" -> q257OracleSql,
-    "q381_map_eval" -> q381OracleSql,
-    "q434_rbp_eval" -> q434OracleSql,
-    "q435_err_eval" -> q435OracleSql,
-    "q249_silhouette" -> q249OracleSql,
-    "q246_cohens_kappa" -> q246OracleSql,
-    "q241_knn_classify" -> q241OracleSql,
-    "q235_random_projection" -> q235OracleSql,
-    "q227_margin_knn" -> q227OracleSql,
-    "q153_ann_eval" -> q153OracleSql,
-    "q215_mrr_eval" -> q215OracleSql,
-    "q154_gram_matrix" -> q154OracleSql,
-    "q111_kmeans_refine" -> q111OracleSql,
-    "q127_semdedup" -> q127OracleSql,
-    "q128_rerank_ann" -> q128OracleSql,
-    "q133_mmr_select" -> q133OracleSql,
-    "q120_multiprobe_ann" -> q120OracleSql,
-    "q29_ann_ivf" -> q29OracleSql,
-    "q42_topk_per_label" -> q42OracleSql,
-    "q52_ann_lsh" -> q52OracleSql,
-    "q76_batch_ann" -> q76OracleSql,
-    "q86_label_centroids" -> q86OracleSql,
-    "q91_quantize_embeddings" -> q91OracleSql)
+    Q("q127_semdedup", q127Semdedup, q127OracleSql),
+    Q("q128_rerank_ann", q128RerankAnn, q128OracleSql),
+    Q("q133_mmr_select", q133MmrSelect, q133OracleSql),
+    Q("q120_multiprobe_ann", q120MultiprobeAnn, q120OracleSql),
+    Q("q29_ann_ivf", q29AnnIvf, q29OracleSql),
+    Q("q42_topk_per_label", q42TopkPerLabel, q42OracleSql),
+    Q("q52_ann_lsh", q52AnnLsh, q52OracleSql),
+    Q("q76_batch_ann", q76BatchAnn, q76OracleSql),
+    Q("q86_label_centroids", q86LabelCentroids, q86OracleSql),
+    Q("q91_quantize_embeddings", q91QuantizeEmbeddings, q91OracleSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.sources.Tables
 
 /** Round-9 statistics + entity-resolution surface: rank-based two-sample
@@ -5599,145 +5600,74 @@ object Stats {
 
   // ------------------------------------------------------------ maps
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q303_mann_whitney" -> (q303MannWhitney _),
-    "q304_acf" -> (q304Acf _),
-    "q305_market_share" -> (q305MarketShare _),
-    "q306_sorted_neighborhood" -> (q306SortedNeighborhood _),
-    "q307_psi" -> (q307Psi _),
-    "q308_kaplan_meier" -> (q308KaplanMeier _),
-    "q309_mann_kendall" -> (q309MannKendall _),
-    "q311_local_supplier_volume" -> (q311LocalSupplierVolume _),
-    "q312_promo_revenue" -> (q312PromoRevenue _),
-    "q316_hll_registers" -> (q316HllRegisters _),
-    "q317_mutual_information" -> (q317MutualInformation _),
-    "q320_spearman" -> (q320Spearman _),
-    "q321_ks_test" -> (q321KsTest _),
-    "q322_kruskal_wallis" -> (q322KruskalWallis _),
-    "q326_brown_forsythe" -> (q326BrownForsythe _),
-    "q328_shipping_priority" -> (q328ShippingPriority _),
-    "q329_returned_items" -> (q329ReturnedItems _),
-    "q330_median_ci" -> (q330MedianCi _),
-    "q332_interarrival_cv" -> (q332InterarrivalCv _),
-    "q333_trimmed_mean" -> (q333TrimmedMean _),
-    "q339_logrank" -> (q339LogRank _),
-    "q342_diff_in_diff" -> (q342DiffInDiff _),
-    "q345_ols_moments" -> (q345OlsMoments _),
-    "q349_sax_words" -> (q349SaxWords _),
-    "q352_bh_fdr" -> (q352BhFdr _),
-    "q354_james_stein" -> (q354JamesStein _),
-    "q355_block_bootstrap" -> (q355BlockBootstrap _),
-    "q357_permutation_test" -> (q357PermutationTest _),
-    "q358_cmh_test" -> (q358CmhTest _),
-    "q359_auc_delong" -> (q359AucDelong _),
-    "q360_trade_volume" -> (q360TradeVolume _),
-    "q383_jarque_bera" -> (q383JarqueBera _),
-    "q361_small_qty_revenue" -> (q361SmallQtyRevenue _),
-    "q362_large_orders" -> (q362LargeOrders _),
-    "q363_disjunctive_revenue" -> (q363DisjunctiveRevenue _),
-    "q364_lapsed_customers" -> (q364LapsedCustomers _),
-    "q389_theil_sen" -> (q389TheilSen _),
-    "q390_jackknife_ratio" -> (q390JackknifeRatio _),
-    "q391_hoeffding_gate" -> (q391HoeffdingGate _),
-    "q392_wald_iv" -> (q392WaldIv _),
-    "q393_uplift_quintiles" -> (q393UpliftQuintiles _),
-    "q394_gamma_poisson_eb" -> (q394GammaPoissonEb _),
-    "q403_benford" -> (q403Benford _),
-    "q405_friedman" -> (q405Friedman _),
-    "q408_runs_test" -> (q408RunsTest _),
-    "q411_successive_halving" -> (q411SuccessiveHalving _),
-    "q415_pocock" -> (q415Pocock _),
-    "q416_nelson_aalen" -> (q416NelsonAalen _),
-    "q418_obrien_fleming" -> (q418ObrienFleming _),
-    "q420_cramer_von_mises" -> (q420CramerVonMises _),
-    "q421_welch_anova" -> (q421WelchAnova _),
-    "q422_mcnemar" -> (q422Mcnemar _),
-    "q423_effect_sizes" -> (q423EffectSizes _),
-    "q425_tukey_hsd" -> (q425TukeyHsd _),
-    "q426_anderson_darling" -> (q426AndersonDarling _),
-    "q427_cochran_q" -> (q427CochranQ _),
-    "q428_jonckheere" -> (q428Jonckheere _),
-    "q429_cochran_armitage" -> (q429CochranArmitage _),
-    "q430_page_trend" -> (q430PageTrend _),
-    "q431_holm_stepdown" -> (q431HolmStepdown _),
-    "q432_pacf" -> (q432Pacf _),
-    "q433_periodogram" -> (q433Periodogram _),
-    "q443_gumbel_maxima" -> (q443GumbelMaxima _),
-    "q460_wilcoxon_signed_rank" -> (q460WilcoxonSignedRank _),
-    "q474_design_effect" -> (q474DesignEffect _),
-    "q480_negbin_fit" -> (q480NegbinFit _),
-    "q492_seasonal_strength" -> (q492SeasonalStrength _),
-    "q444_ljung_box" -> (q444LjungBox _),
-    "q446_dispersion" -> (q446Dispersion _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q303_mann_whitney" -> q303OracleSql,
-    "q304_acf" -> q304OracleSql,
-    "q305_market_share" -> q305OracleSql,
-    "q306_sorted_neighborhood" -> q306OracleSql,
-    "q307_psi" -> q307OracleSql,
-    "q308_kaplan_meier" -> q308OracleSql,
-    "q309_mann_kendall" -> q309OracleSql,
-    "q311_local_supplier_volume" -> q311OracleSql,
-    "q312_promo_revenue" -> q312OracleSql,
-    "q316_hll_registers" -> q316OracleSql,
-    "q317_mutual_information" -> q317OracleSql,
-    "q320_spearman" -> q320OracleSql,
-    "q321_ks_test" -> q321OracleSql,
-    "q322_kruskal_wallis" -> q322OracleSql,
-    "q326_brown_forsythe" -> q326OracleSql,
-    "q328_shipping_priority" -> q328OracleSql,
-    "q329_returned_items" -> q329OracleSql,
-    "q330_median_ci" -> q330OracleSql,
-    "q332_interarrival_cv" -> q332OracleSql,
-    "q333_trimmed_mean" -> q333OracleSql,
-    "q339_logrank" -> q339OracleSql,
-    "q342_diff_in_diff" -> q342OracleSql,
-    "q345_ols_moments" -> q345OracleSql,
-    "q349_sax_words" -> q349OracleSql,
-    "q352_bh_fdr" -> q352OracleSql,
-    "q354_james_stein" -> q354OracleSql,
-    "q355_block_bootstrap" -> q355OracleSql,
-    "q357_permutation_test" -> q357OracleSql,
-    "q358_cmh_test" -> q358OracleSql,
-    "q359_auc_delong" -> q359OracleSql,
-    "q360_trade_volume" -> q360OracleSql,
-    "q383_jarque_bera" -> q383OracleSql,
-    "q361_small_qty_revenue" -> q361OracleSql,
-    "q362_large_orders" -> q362OracleSql,
-    "q363_disjunctive_revenue" -> q363OracleSql,
-    "q364_lapsed_customers" -> q364OracleSql,
-    "q389_theil_sen" -> q389OracleSql,
-    "q390_jackknife_ratio" -> q390OracleSql,
-    "q391_hoeffding_gate" -> q391OracleSql,
-    "q392_wald_iv" -> q392OracleSql,
-    "q393_uplift_quintiles" -> q393OracleSql,
-    "q394_gamma_poisson_eb" -> q394OracleSql,
-    "q403_benford" -> q403OracleSql,
-    "q405_friedman" -> q405OracleSql,
-    "q408_runs_test" -> q408OracleSql,
-    "q411_successive_halving" -> q411OracleSql,
-    "q415_pocock" -> q415OracleSql,
-    "q416_nelson_aalen" -> q416OracleSql,
-    "q418_obrien_fleming" -> q418OracleSql,
-    "q420_cramer_von_mises" -> q420OracleSql,
-    "q421_welch_anova" -> q421OracleSql,
-    "q422_mcnemar" -> q422OracleSql,
-    "q423_effect_sizes" -> q423OracleSql,
-    "q425_tukey_hsd" -> q425OracleSql,
-    "q426_anderson_darling" -> q426OracleSql,
-    "q427_cochran_q" -> q427OracleSql,
-    "q428_jonckheere" -> q428OracleSql,
-    "q429_cochran_armitage" -> q429OracleSql,
-    "q430_page_trend" -> q430OracleSql,
-    "q431_holm_stepdown" -> q431OracleSql,
-    "q432_pacf" -> q432OracleSql,
-    "q433_periodogram" -> q433OracleSql,
-    "q443_gumbel_maxima" -> q443OracleSql,
-    "q460_wilcoxon_signed_rank" -> q460OracleSql,
-    "q474_design_effect" -> q474OracleSql,
-    "q480_negbin_fit" -> q480OracleSql,
-    "q492_seasonal_strength" -> q492OracleSql,
-    "q444_ljung_box" -> q444OracleSql,
-    "q446_dispersion" -> q446OracleSql)
+  val registry: Seq[Q] = Seq(
+    Q("q303_mann_whitney", q303MannWhitney, q303OracleSql),
+    Q("q304_acf", q304Acf, q304OracleSql),
+    Q("q305_market_share", q305MarketShare, q305OracleSql),
+    Q("q306_sorted_neighborhood", q306SortedNeighborhood, q306OracleSql),
+    Q("q307_psi", q307Psi, q307OracleSql),
+    Q("q308_kaplan_meier", q308KaplanMeier, q308OracleSql),
+    Q("q309_mann_kendall", q309MannKendall, q309OracleSql),
+    Q("q311_local_supplier_volume", q311LocalSupplierVolume, q311OracleSql),
+    Q("q312_promo_revenue", q312PromoRevenue, q312OracleSql),
+    Q("q316_hll_registers", q316HllRegisters, q316OracleSql),
+    Q("q317_mutual_information", q317MutualInformation, q317OracleSql),
+    Q("q320_spearman", q320Spearman, q320OracleSql),
+    Q("q321_ks_test", q321KsTest, q321OracleSql),
+    Q("q322_kruskal_wallis", q322KruskalWallis, q322OracleSql),
+    Q("q326_brown_forsythe", q326BrownForsythe, q326OracleSql),
+    Q("q328_shipping_priority", q328ShippingPriority, q328OracleSql),
+    Q("q329_returned_items", q329ReturnedItems, q329OracleSql),
+    Q("q330_median_ci", q330MedianCi, q330OracleSql),
+    Q("q332_interarrival_cv", q332InterarrivalCv, q332OracleSql),
+    Q("q333_trimmed_mean", q333TrimmedMean, q333OracleSql),
+    Q("q339_logrank", q339LogRank, q339OracleSql),
+    Q("q342_diff_in_diff", q342DiffInDiff, q342OracleSql),
+    Q("q345_ols_moments", q345OlsMoments, q345OracleSql),
+    Q("q349_sax_words", q349SaxWords, q349OracleSql),
+    Q("q352_bh_fdr", q352BhFdr, q352OracleSql),
+    Q("q354_james_stein", q354JamesStein, q354OracleSql),
+    Q("q355_block_bootstrap", q355BlockBootstrap, q355OracleSql),
+    Q("q357_permutation_test", q357PermutationTest, q357OracleSql),
+    Q("q358_cmh_test", q358CmhTest, q358OracleSql),
+    Q("q359_auc_delong", q359AucDelong, q359OracleSql),
+    Q("q360_trade_volume", q360TradeVolume, q360OracleSql),
+    Q("q383_jarque_bera", q383JarqueBera, q383OracleSql),
+    Q("q361_small_qty_revenue", q361SmallQtyRevenue, q361OracleSql),
+    Q("q362_large_orders", q362LargeOrders, q362OracleSql),
+    Q("q363_disjunctive_revenue", q363DisjunctiveRevenue, q363OracleSql),
+    Q("q364_lapsed_customers", q364LapsedCustomers, q364OracleSql),
+    Q("q389_theil_sen", q389TheilSen, q389OracleSql),
+    Q("q390_jackknife_ratio", q390JackknifeRatio, q390OracleSql),
+    Q("q391_hoeffding_gate", q391HoeffdingGate, q391OracleSql),
+    Q("q392_wald_iv", q392WaldIv, q392OracleSql),
+    Q("q393_uplift_quintiles", q393UpliftQuintiles, q393OracleSql),
+    Q("q394_gamma_poisson_eb", q394GammaPoissonEb, q394OracleSql),
+    Q("q403_benford", q403Benford, q403OracleSql),
+    Q("q405_friedman", q405Friedman, q405OracleSql),
+    Q("q408_runs_test", q408RunsTest, q408OracleSql),
+    Q("q411_successive_halving", q411SuccessiveHalving, q411OracleSql),
+    Q("q415_pocock", q415Pocock, q415OracleSql),
+    Q("q416_nelson_aalen", q416NelsonAalen, q416OracleSql),
+    Q("q418_obrien_fleming", q418ObrienFleming, q418OracleSql),
+    Q("q420_cramer_von_mises", q420CramerVonMises, q420OracleSql),
+    Q("q421_welch_anova", q421WelchAnova, q421OracleSql),
+    Q("q422_mcnemar", q422Mcnemar, q422OracleSql),
+    Q("q423_effect_sizes", q423EffectSizes, q423OracleSql),
+    Q("q425_tukey_hsd", q425TukeyHsd, q425OracleSql),
+    Q("q426_anderson_darling", q426AndersonDarling, q426OracleSql),
+    Q("q427_cochran_q", q427CochranQ, q427OracleSql),
+    Q("q428_jonckheere", q428Jonckheere, q428OracleSql),
+    Q("q429_cochran_armitage", q429CochranArmitage, q429OracleSql),
+    Q("q430_page_trend", q430PageTrend, q430OracleSql),
+    Q("q431_holm_stepdown", q431HolmStepdown, q431OracleSql),
+    Q("q432_pacf", q432Pacf, q432OracleSql),
+    Q("q433_periodogram", q433Periodogram, q433OracleSql),
+    Q("q443_gumbel_maxima", q443GumbelMaxima, q443OracleSql),
+    Q("q460_wilcoxon_signed_rank", q460WilcoxonSignedRank, q460OracleSql),
+    Q("q474_design_effect", q474DesignEffect, q474OracleSql),
+    Q("q480_negbin_fit", q480NegbinFit, q480OracleSql),
+    Q("q492_seasonal_strength", q492SeasonalStrength, q492OracleSql),
+    Q("q444_ljung_box", q444LjungBox, q444OracleSql),
+    Q("q446_dispersion", q446Dispersion, q446OracleSql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Q
 import graft.functions.PortableHash._
 import graft.sources.Tables
 
@@ -143,7 +144,6 @@ object TextOps {
     * (the portable-hash primitive itself, exposed as an operator; native
     * codegen'd byte fold, bit-identical to the HOF char fold on ASCII). */
   def q37Fingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     t(s, dir, "documents").select(
       col("doc_id"),
       expr("poly_hash(text)").as("fingerprint"))
@@ -211,7 +211,6 @@ object TextOps {
       .select(col("doc_id"), explode(col("ws")).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
       .groupBy("doc_id").agg(max("c").as("top_token_n"))
-    graft.functions.GraftFunctions.registerAll(s)
     val topBi = docs
       .filter(size(col("ws")) >= 2)
       // native codegen gram generator (round 13, guide §4) — the
@@ -597,7 +596,6 @@ object TextOps {
     * the expression instead of silently corrupting the position pack.
     */
   def q102Winnowing(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     winnowKeyed(t(s, dir, "documents"))
   }
 
@@ -608,7 +606,6 @@ object TextOps {
     * size(wn_t) < ShingleN + w - 1) and explode drops empties — a filter
     * here would just push a second regex split below the project. */
   private[operators] def winnowKeyed(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(docs.sparkSession)
     val w = WinnowW
     val pb = WinnowPosBase
     docs
@@ -736,7 +733,6 @@ object TextOps {
     * per-doc aggregate — O(corpus bigrams) with map-side reduction,
     * never pairwise. */
   def q112BigramNovelty(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val sh = t(s, dir, "documents")
       .select(col("doc_id"), explode(expr(
         "array_distinct(shingle_hashes(split(text, ' '), 2))")).as("h"))
@@ -784,7 +780,6 @@ object TextOps {
     * the df cap drops them, same reasoning as a stop-shingle list), then
     * a pair count + threshold. Never all-pairs. */
   def q113FingerprintMatch(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     // distinct (doc, fingerprint-hash): positions don't matter for
     // matching, only WHICH fingerprints collide
     val fps = q102Winnowing(s, dir)
@@ -871,7 +866,6 @@ object TextOps {
                                    CAST(size(toks) - 1 AS BIGINT))))))"""
 
   def q122BoilerplateScrub(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val W = ScrubSpanTokens
     val fps = q102Winnowing(s, dir).cache() // census + marks both read it
     val hot = fps.select("doc_id", "fp_hash").distinct()
@@ -1339,7 +1333,6 @@ object TextOps {
     * This is the sketch you keep PER CORPUS SHARD and merge at publish
     * time — the q94 mergeable-stats contract applied to frequencies. */
   def q144Countmin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val toks = t(s, dir, "documents")
       .select(split(col("text"), " ").as("tw"))
       .filter(size(col("tw")) >= 2)
@@ -1423,7 +1416,6 @@ object TextOps {
     * count (vocabulary-bounded, the q137 state argument). The frame is
     * checkpointed once for its three consumers (q177 discipline). */
   def q214BigramLmScore(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val big = t(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
@@ -1782,7 +1774,6 @@ object TextOps {
     * no self-join, no shuffle; bigrams never leave the row until the
     * census groupBy). */
   private def adjacentBigrams(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     adjacentBigramsOf(t(s, dir, "documents"))
   }
 
@@ -2149,7 +2140,6 @@ object TextOps {
       .select(expr(s"doc_id * $GrowthBuckets div nd").as("b"),
         split(col("text"), " ").as("ws"))
       .localCheckpoint(true)
-    graft.functions.GraftFunctions.registerAll(s)
     val firstB = toks
       .filter(size(col("ws")) >= 3)
       // native codegen trigram generator (round 13, guide §4)
@@ -2786,96 +2776,50 @@ object TextOps {
            ELSE 0 END) // count(*) AS BIGINT) AS r2_prec_ppm
        FROM pairs GROUP BY source"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q502_rouge_overlap" -> (q502RougeOverlap _),
-    "q478_stopword_advisor" -> (q478StopwordAdvisor _),
-    "q455_cross_lingual_contamination" ->
-      (q455CrossLingualContamination _),
-    "q452_burrows_delta" -> (q452BurrowsDelta _),
-    "q448_rake_keywords" -> (q448RakeKeywords _),
-    "q438_readability" -> (q438Readability _),
-    "q367_zipf_fit" -> (q367ZipfFit _),
-    "q337_collocations" -> (q337Collocations _),
-    "q346_vocab_growth" -> (q346VocabGrowth _),
-    "q343_good_turing" -> (q343GoodTuring _),
-    "q340_kneser_ney" -> (q340KneserNey _),
-    "q348_kn_cross_entropy" -> (q348KnCrossEntropy _),
-    "q341_textrank" -> (q341Textrank _),
-    "q331_source_jsd" -> (q331SourceJsd _),
-    "q276_truncation_planner" -> (q276TruncationPlanner _),
-    "q262_token_burstiness" -> (q262TokenBurstiness _),
-    "q244_lang_confusion" -> (q244LangConfusion _),
-    "q243_vocab_overlap" -> (q243VocabOverlap _),
-    "q214_bigram_lm_score" -> (q214BigramLmScore _),
-    "q218_tokenizer_fertility" -> (q218TokenizerFertility _),
-    "q113_fingerprint_match" -> (q113FingerprintMatch _),
-    "q136_vocab_coverage" -> (q136VocabCoverage _),
-    "q144_countmin" -> (q144Countmin _),
-    "q149_bpe_tokenize" -> (q149BpeTokenize _),
-    "q137_bpe_merges" -> (q137BpeMerges _),
-    "q142_cooccurrence" -> (q142Cooccurrence _),
-    "q122_boilerplate_scrub" -> (q122BoilerplateScrub _),
-    "q112_bigram_novelty" -> (q112BigramNovelty _),
-    "q102_winnowing" -> (q102Winnowing _),
-    "q108_vocab_encode" -> (q108VocabEncode _),
-    "q89_chunk_documents" -> (q89ChunkDocuments _),
-    "q90_quality_gate" -> (q90QualityGate _),
-    "q96_pii_redaction" -> (q96PiiRedaction _),
-    "q98_inverted_index" -> (q98InvertedIndex _),
-    "q409_postings_varint" -> (q409PostingsVarint _),
-    "q100_heavy_hitters" -> (q100HeavyHitters _),
-    "q34_lang_id" -> (q34LangId _),
-    "q35_quality_score" -> (q35QualityScore _),
-    "q36_token_count" -> (q36TokenCount _),
-    "q37_fingerprint" -> (q37Fingerprint _),
-    "q59_tf_df" -> (q59TfDf _),
-    "q61_string_agg" -> (q61StringAgg _),
-    "q72_repetition" -> (q72Repetition _),
-    "q80_regex_family" -> (q80RegexFamily _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q478_stopword_advisor" -> q478OracleSql,
-    "q455_cross_lingual_contamination" -> q455OracleSql,
-    "q452_burrows_delta" -> q452OracleSql,
-    "q448_rake_keywords" -> q448OracleSql,
-    "q438_readability" -> q438OracleSql,
-    "q367_zipf_fit" -> q367OracleSql,
-    "q337_collocations" -> q337OracleSql,
-    "q343_good_turing" -> q343OracleSql,
-    "q346_vocab_growth" -> q346OracleSql,
-    "q340_kneser_ney" -> q340OracleSql,
-    "q348_kn_cross_entropy" -> q348OracleSql,
-    "q341_textrank" -> q341OracleSql,
-    "q331_source_jsd" -> q331OracleSql,
-    "q276_truncation_planner" -> q276OracleSql,
-    "q262_token_burstiness" -> q262OracleSql,
-    "q244_lang_confusion" -> q244OracleSql,
-    "q243_vocab_overlap" -> q243OracleSql,
-    "q214_bigram_lm_score" -> q214OracleSql,
-    "q218_tokenizer_fertility" -> q218OracleSql,
-    "q136_vocab_coverage" -> q136OracleSql,
-    "q144_countmin" -> q144OracleSql,
-    "q149_bpe_tokenize" -> q149OracleSql,
-    "q137_bpe_merges" -> q137OracleSql,
-    "q142_cooccurrence" -> q142OracleSql,
-    "q113_fingerprint_match" -> q113OracleSql,
-    "q122_boilerplate_scrub" -> q122OracleSql,
-    "q112_bigram_novelty" -> q112OracleSql,
-    "q102_winnowing" -> q102OracleSql,
-    "q108_vocab_encode" -> q108OracleSql,
-    "q89_chunk_documents" -> q89OracleSql,
-    "q90_quality_gate" -> q90OracleSql,
-    "q96_pii_redaction" -> q96OracleSql,
-    "q98_inverted_index" -> q98OracleSql,
-    "q409_postings_varint" -> q409OracleSql,
-    "q100_heavy_hitters" -> q100OracleSql,
-    "q34_lang_id" -> q34OracleSql,
-    "q35_quality_score" -> q35OracleSql,
-    "q36_token_count" -> q36OracleSql,
-    "q37_fingerprint" -> q37OracleSql,
-    "q59_tf_df" -> q59OracleSql,
-    "q61_string_agg" -> q61OracleSql,
-    "q72_repetition" -> q72OracleSql,
-    "q502_rouge_overlap" -> q502OracleSql,
-    "q80_regex_family" -> q80OracleSql)
+  val registry: Seq[Q] = Seq(
+    Q("q502_rouge_overlap", q502RougeOverlap, q502OracleSql),
+    Q("q478_stopword_advisor", q478StopwordAdvisor, q478OracleSql),
+    Q("q455_cross_lingual_contamination", q455CrossLingualContamination,
+      q455OracleSql),
+    Q("q452_burrows_delta", q452BurrowsDelta, q452OracleSql),
+    Q("q448_rake_keywords", q448RakeKeywords, q448OracleSql),
+    Q("q438_readability", q438Readability, q438OracleSql),
+    Q("q367_zipf_fit", q367ZipfFit, q367OracleSql),
+    Q("q337_collocations", q337Collocations, q337OracleSql),
+    Q("q346_vocab_growth", q346VocabGrowth, q346OracleSql),
+    Q("q343_good_turing", q343GoodTuring, q343OracleSql),
+    Q("q340_kneser_ney", q340KneserNey, q340OracleSql),
+    Q("q348_kn_cross_entropy", q348KnCrossEntropy, q348OracleSql),
+    Q("q341_textrank", q341Textrank, q341OracleSql),
+    Q("q331_source_jsd", q331SourceJsd, q331OracleSql),
+    Q("q276_truncation_planner", q276TruncationPlanner, q276OracleSql),
+    Q("q262_token_burstiness", q262TokenBurstiness, q262OracleSql),
+    Q("q244_lang_confusion", q244LangConfusion, q244OracleSql),
+    Q("q243_vocab_overlap", q243VocabOverlap, q243OracleSql),
+    Q("q214_bigram_lm_score", q214BigramLmScore, q214OracleSql),
+    Q("q218_tokenizer_fertility", q218TokenizerFertility, q218OracleSql),
+    Q("q113_fingerprint_match", q113FingerprintMatch, q113OracleSql),
+    Q("q136_vocab_coverage", q136VocabCoverage, q136OracleSql),
+    Q("q144_countmin", q144Countmin, q144OracleSql),
+    Q("q149_bpe_tokenize", q149BpeTokenize, q149OracleSql),
+    Q("q137_bpe_merges", q137BpeMerges, q137OracleSql),
+    Q("q142_cooccurrence", q142Cooccurrence, q142OracleSql),
+    Q("q122_boilerplate_scrub", q122BoilerplateScrub, q122OracleSql),
+    Q("q112_bigram_novelty", q112BigramNovelty, q112OracleSql),
+    Q("q102_winnowing", q102Winnowing, q102OracleSql),
+    Q("q108_vocab_encode", q108VocabEncode, q108OracleSql),
+    Q("q89_chunk_documents", q89ChunkDocuments, q89OracleSql),
+    Q("q90_quality_gate", q90QualityGate, q90OracleSql),
+    Q("q96_pii_redaction", q96PiiRedaction, q96OracleSql),
+    Q("q98_inverted_index", q98InvertedIndex, q98OracleSql),
+    Q("q409_postings_varint", q409PostingsVarint, q409OracleSql),
+    Q("q100_heavy_hitters", q100HeavyHitters, q100OracleSql),
+    Q("q34_lang_id", q34LangId, q34OracleSql),
+    Q("q35_quality_score", q35QualityScore, q35OracleSql),
+    Q("q36_token_count", q36TokenCount, q36OracleSql),
+    Q("q37_fingerprint", q37Fingerprint, q37OracleSql),
+    Q("q59_tf_df", q59TfDf, q59OracleSql),
+    Q("q61_string_agg", q61StringAgg, q61OracleSql),
+    Q("q72_repetition", q72Repetition, q72OracleSql),
+    Q("q80_regex_family", q80RegexFamily, q80OracleSql))
 }

@@ -2,8 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+
+import graft.Q
 
 /** Typed event row for stateful operators. */
 case class Event(
@@ -101,6 +103,33 @@ object EventStream {
       .parquet(s"$sfDir/events.parque[t]")
     graft.sources.Tables.normalizeEventTs(raw)
   }
+
+  /** Drain a finite streaming replay into the in-memory sink `name` in
+    * `outputMode` with one Trigger.AvailableNow run, and read the sink
+    * back. An earlier run's sink view is dropped first, so re-running a
+    * query in the same session is idempotent. */
+  def drainToMemory(stream: DataFrame, name: String, outputMode: String)
+      : DataFrame = {
+    val s = stream.sparkSession
+    s.catalog.dropTempView(name)
+    stream.writeStream
+      .outputMode(outputMode)
+      .format("memory")
+      .queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    s.table(name)
+  }
+
+  /** Drain a finite streaming replay with one Trigger.AvailableNow run,
+    * handing every micro-batch to `f`; returns when the replay is done. */
+  def drainEachBatch(stream: DataFrame)(f: DataFrame => Unit): Unit =
+    stream.writeStream
+      .foreachBatch((batch: DataFrame, _: Long) => f(batch))
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 
   /** Project a raw events frame to the typed shape. */
   def typedEvents(df: DataFrame): Dataset[Event] = {
@@ -224,16 +253,8 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q109_stream_windows_mem"
-    s.catalog.dropTempView(name) // idempotent across re-runs in a session
-    val q = windowedAgg(readEvents(s, dir, maxFilesPerTrigger).withWatermark("ts", "1 day"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    val stream = windowedAgg(readEvents(s, dir, maxFilesPerTrigger).withWatermark("ts", "1 day"))
+    drainToMemory(stream, name, "complete")
   }
 
   /** q114 — DECLARED custom streaming state: the events stream replayed
@@ -251,17 +272,9 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q114_stream_profiles_mem"
-    s.catalog.dropTempView(name)
-    val q = runningUserActivity(typedEvents(readEvents(s, dir, maxFilesPerTrigger)))
+    val stream = runningUserActivity(typedEvents(readEvents(s, dir, maxFilesPerTrigger)))
       .toDF()
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drainToMemory(stream, name, "update")
       .groupBy("user_id")
       .agg(org.apache.spark.sql.functions.max("n_events").as("n_events"),
         org.apache.spark.sql.functions.max("n_purchases")
@@ -288,19 +301,11 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q117_stream_sessions_mem"
-    s.catalog.dropTempView(name)
     import s.implicits._
-    val q = sessionizeStateful(
+    val stream = sessionizeStateful(
       typedEvents(readEvents(s, dir, maxFilesPerTrigger)), SessionGapSeconds)
       .toDF()
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drainToMemory(stream, name, "append")
   }
 
   /** Attribution window for q121 (micros; = INTERVAL 1 HOUR). */
@@ -325,7 +330,6 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q121_stream_interval_join_mem"
-    s.catalog.dropTempView(name)
     // a stream-stream join keeps FOUR state stores per shuffle
     // partition; at this replay size the run is store-commit bound, so
     // pin the stateful parallelism low for the (ephemeral-checkpoint)
@@ -334,20 +338,13 @@ object EventStream {
     val before = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "8")
     try {
-      val q = clickPurchaseJoin(readEvents(s, dir, maxFilesPerTrigger),
+      val stream = clickPurchaseJoin(readEvents(s, dir, maxFilesPerTrigger),
           "2 hours", "INTERVAL 1 HOUR")
         .select(col("click_id"), col("purchase_id"),
           (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
             .as("gap_us"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainToMemory(stream, name, "append")
     } finally s.conf.set("spark.sql.shuffle.partitions", before)
-    s.table(name)
   }
 
   /** q126 — streaming EXACT DEDUP as a declared query (the ingest-time
@@ -365,20 +362,12 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q126_stream_dedup_mem"
-    s.catalog.dropTempView(name)
     val doubled = readEvents(s, dir, maxFilesPerTrigger).unionByName(readEvents(s, dir, maxFilesPerTrigger))
-    val q = dedupStream(
+    val stream = dedupStream(
         doubled.select("event_id", "ts", "user_id", "event_type"),
         "1 day")
       .select(col("event_id"), col("user_id"), col("event_type"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drainToMemory(stream, name, "append")
   }
 
   /** q140 — STREAM-STATIC enrichment join as a declared run, the fifth
@@ -397,24 +386,16 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q140_stream_enrich_mem"
-    s.catalog.dropTempView(name)
     val dim = graft.sources.Tables.load(s, dir, "customer")
       .select(col("c_custkey").as("user_id"),
         col("c_nationkey").cast("bigint").as("nation"))
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .join(broadcast(dim), "user_id")
       .groupBy("nation")
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("n_purchases"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drainToMemory(stream, name, "complete")
   }
 
   private def q140OracleSql: String =
@@ -469,24 +450,19 @@ object EventStream {
     import s.implicits._
     var snapshot = Seq.empty[(Long, Long, String, Long)]
       .toDF("user_id", "k", "last_type", "n_upserts")
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val input = readEvents(s, dir, maxFilesPerTrigger)
       .select(col("user_id"),
         (unix_timestamp(col("ts")) * UpsertKeyScale + col("event_id"))
           .as("k"),
         col("event_type").as("last_type"))
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val delta = batch
-          .groupBy("user_id")
-          .agg(max_by(col("last_type"), col("k")).as("last_type"),
-            max("k").as("k"), count(lit(1)).as("n_upserts"))
-          .select("user_id", "k", "last_type", "n_upserts")
-        snapshot = mergeUpserts(snapshot, delta).localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainEachBatch(input) { batch =>
+      val delta = batch
+        .groupBy("user_id")
+        .agg(max_by(col("last_type"), col("k")).as("last_type"),
+          max("k").as("k"), count(lit(1)).as("n_upserts"))
+        .select("user_id", "k", "last_type", "n_upserts")
+      snapshot = mergeUpserts(snapshot, delta).localCheckpoint(true)
+    }
     snapshot
   }
 
@@ -535,41 +511,50 @@ object EventStream {
     * maintained continuously). */
   def q157StreamLsh(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
+      : org.apache.spark.sql.DataFrame =
+    incrementalLshPairs(plantedDocs(s, dir, maxFilesPerTrigger))
+
+  /** The documents replay plus q30's planted near-dup twin of every doc
+    * (last token dropped, id shifted by `Dedup.PlantedOffset`). */
+  private def plantedDocs(s: SparkSession, dir: String,
+      maxFilesPerTrigger: Option[Int]): org.apache.spark.sql.DataFrame = {
+    val docs = readDocs(s, dir, maxFilesPerTrigger).select("doc_id", "text")
+    docs.unionByName(docs.select(
+      (col("doc_id") + graft.operators.Dedup.PlantedOffset).as("doc_id"),
+      expr("array_join(slice(split(text, ' '), 1, " +
+        "size(split(text, ' ')) - 1), ' ')").as("text")))
+  }
+
+  /** q157's incremental LSH over a (doc_id, text) stream: each
+    * micro-batch is banded once, self-joined for in-batch pairs, joined
+    * against the accumulated band index for batch-vs-corpus pairs, and
+    * appended to the index. Returns the distinct lifetime pair set. */
+  private def incrementalLshPairs(input: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
+    val s = input.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.registerAll(s)
     val D = graft.operators.Dedup
     var index = Seq.empty[(Long, Int, String)]
       .toDF("doc_id", "band", "bkey")
     var pairs = Seq.empty[(Long, Long)].toDF("doc_id_1", "doc_id_2")
-    val docs = readDocs(s, dir, maxFilesPerTrigger).select("doc_id", "text")
-    val planted = docs.unionByName(docs.select(
-      (col("doc_id") + D.PlantedOffset).as("doc_id"),
-      expr("array_join(slice(split(text, ' '), 1, " +
-        "size(split(text, ' ')) - 1), ' ')").as("text")))
-    val q = planted.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = D.bandedKeys(batch.toDF()).localCheckpoint(true)
-        val inBatch = b.as("x").join(b.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.bkey") === col("y.bkey") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_id_1"),
-            col("y.doc_id").as("doc_id_2"))
-        val vsIndex = b.as("b").join(index.as("i"),
-            col("b.band") === col("i.band") &&
-              col("b.bkey") === col("i.bkey"))
-          .select(
-            least(col("b.doc_id"), col("i.doc_id")).as("doc_id_1"),
-            greatest(col("b.doc_id"), col("i.doc_id")).as("doc_id_2"))
-        pairs = pairs.unionByName(inBatch.unionByName(vsIndex))
-          .localCheckpoint(true)
-        index = index.unionByName(b).localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainEachBatch(input) { batch =>
+      val b = D.bandedKeys(batch).localCheckpoint(true)
+      val inBatch = b.as("x").join(b.as("y"),
+          col("x.band") === col("y.band") &&
+            col("x.bkey") === col("y.bkey") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_id_1"),
+          col("y.doc_id").as("doc_id_2"))
+      val vsIndex = b.as("b").join(index.as("i"),
+          col("b.band") === col("i.band") &&
+            col("b.bkey") === col("i.bkey"))
+        .select(
+          least(col("b.doc_id"), col("i.doc_id")).as("doc_id_1"),
+          greatest(col("b.doc_id"), col("i.doc_id")).as("doc_id_2"))
+      pairs = pairs.unionByName(inBatch.unionByName(vsIndex))
+        .localCheckpoint(true)
+      index = index.unionByName(b).localCheckpoint(true)
+    }
     pairs.distinct()
   }
 
@@ -596,42 +581,9 @@ object EventStream {
   def q302StreamChunkDedup(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    graft.functions.GraftFunctions.registerAll(s)
     val D = graft.operators.Dedup
-    var index = Seq.empty[(Long, Int, String)]
-      .toDF("doc_id", "band", "bkey")
-    var pairs = Seq.empty[(Long, Long)].toDF("doc_id_1", "doc_id_2")
-    val docs = readDocs(s, dir, maxFilesPerTrigger).select("doc_id", "text")
-    val planted = docs.unionByName(docs.select(
-      (col("doc_id") + D.PlantedOffset).as("doc_id"),
-      expr("array_join(slice(split(text, ' '), 1, " +
-        "size(split(text, ' ')) - 1), ' ')").as("text")))
-    val chunks = D.chunkPseudoDocs(planted)
-    val q = chunks.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = D.bandedKeys(batch.toDF()).localCheckpoint(true)
-        val inBatch = b.as("x").join(b.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.bkey") === col("y.bkey") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_id_1"),
-            col("y.doc_id").as("doc_id_2"))
-        val vsIndex = b.as("b").join(index.as("i"),
-            col("b.band") === col("i.band") &&
-              col("b.bkey") === col("i.bkey"))
-          .select(
-            least(col("b.doc_id"), col("i.doc_id")).as("doc_id_1"),
-            greatest(col("b.doc_id"), col("i.doc_id")).as("doc_id_2"))
-        pairs = pairs.unionByName(inBatch.unionByName(vsIndex))
-          .localCheckpoint(true)
-        index = index.unionByName(b).localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    D.chunkPairCensus(pairs.distinct())
+    D.chunkPairCensus(incrementalLshPairs(
+      D.chunkPseudoDocs(plantedDocs(s, dir, maxFilesPerTrigger))))
   }
 
   /** q188 — the DECLARATIVE streaming sessionizer: `session_window`
@@ -657,8 +609,7 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q188_stream_session_window_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withColumn("ts_s", date_trunc("second", col("ts")))
       .withWatermark("ts_s", "0 seconds")
       .groupBy(session_window(col("ts_s"), "30 minutes"), col("user_id"))
@@ -666,14 +617,7 @@ object EventStream {
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("session_end"), col("n_events"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drainToMemory(stream, name, "append")
   }
 
   /** q41's batch sessionization, filtered to the sessions append mode
@@ -728,10 +672,9 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q236_stream_kmv_mem"
-    s.catalog.dropTempView(name)
     val kmv = udaf(new graft.functions.KmvMin(StreamKmvK),
       org.apache.spark.sql.Encoders.scalaLong)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .select(col("ts"), col("event_type"),
         expr(s"(user_id * 1103515245 + 12345) % $StreamKmvM").as("hv"))
@@ -739,14 +682,7 @@ object EventStream {
       .agg(kmv(col("hv")).as("mins"))
       .select(col("window.start").cast("date").as("day"),
         col("event_type"), col("mins"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drainToMemory(stream, name, "complete")
       .select(col("day"), col("event_type"),
         size(col("mins")).cast("bigint").as("n_mins"),
         expr("element_at(mins, size(mins))").as("kth_hash"))
@@ -804,25 +740,17 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q239_stream_hh_mem"
-    s.catalog.dropTempView(name)
     val mg = udaf(new graft.functions.MisraGries(StreamHhK),
       org.apache.spark.sql.Encoders.scalaLong)
     val keyExpr = "CASE WHEN user_id % 10 = 0 THEN -1 ELSE user_id END"
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .withColumn("k", expr(keyExpr))
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(mg(col("k")).as("cands"))
       .select(col("window.start").cast("date").as("day"),
         col("event_type"), col("cands"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val sketch = s.table(name)
+    val sketch = drainToMemory(stream, name, "complete")
     val exact = graft.sources.Tables.load(s, dir, "events")
       .groupBy(col("ts").cast("date").as("day"), col("event_type"),
         expr(keyExpr).as("k"))
@@ -870,8 +798,7 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q253_stream_quantile_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .select(col("ts"), col("event_type"),
         expr("CAST(floor(value) AS BIGINT)").as("bin"))
@@ -879,13 +806,6 @@ object EventStream {
       .agg(count(lit(1)).as("c"))
       .select(col("window.start").cast("date").as("day"),
         col("event_type"), col("bin"), col("c"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("day", "event_type").orderBy("bin")
       .rowsBetween(org.apache.spark.sql.expressions.Window
@@ -893,7 +813,7 @@ object EventStream {
         .currentRow)
     val tot = org.apache.spark.sql.expressions.Window
       .partitionBy("day", "event_type")
-    s.table(name)
+    drainToMemory(stream, name, "complete")
       .withColumn("cum", sum("c").over(w))
       .withColumn("n", sum("c").over(tot))
       .groupBy("day", "event_type")
@@ -998,18 +918,10 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q267_stream_rate_limit_mem"
-    s.catalog.dropTempView(name)
     import s.implicits._
-    val q = rateLimitStateful(typedEvents(readEvents(s, dir, maxFilesPerTrigger)))
+    val stream = rateLimitStateful(typedEvents(readEvents(s, dir, maxFilesPerTrigger)))
       .toDF()
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drainToMemory(stream, name, "append")
       .groupBy("user_id")
       .agg(sum("n_events").as("n_events"),
         sum("n_allowed").as("n_allowed"),
@@ -1080,7 +992,6 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q283_stream_funnel_mem"
-    s.catalog.dropTempView(name)
     import s.implicits._
     val machine = typedEvents(readEvents(s, dir, maxFilesPerTrigger))
       .map(e => (e.user_id, e.event_type,
@@ -1109,15 +1020,7 @@ object EventStream {
           state.update(st)
           Iterator(FunnelPos(uid, st.stage))
       }
-    val q = machine.toDF()
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name).groupBy("user_id")
+    drainToMemory(machine.toDF(), name, "append").groupBy("user_id")
       .agg(max("stage").as("stage"))
   }
 
@@ -1180,13 +1083,12 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q313_stream_psi_mem"
-    s.catalog.dropTempView(name)
     val ladder = StreamPsiEdges.zipWithIndex
       .foldRight(lit(StreamPsiEdges.length + 1L)) {
         case ((edge, i), rest) =>
           when(col("vc") < edge, (i + 1).toLong).otherwise(rest)
       }
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .select(col("ts"),
         expr("CAST(floor(value * 100) AS BIGINT)").as("vc"))
@@ -1195,17 +1097,10 @@ object EventStream {
       .agg(count(lit(1)).as("k"))
       .select(col("window.start").cast("date").as("day"),
         col("bin"), col("k"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // MemoryPlan is not a MultiInstanceRelation: the spine/ref self-joins
     // below would hit "conflicting references" — checkpoint the (tiny,
     // day×bin-bounded) census into a LogicalRDD first
-    val census = s.table(name).localCheckpoint(true)
+    val census = drainToMemory(stream, name, "complete").localCheckpoint(true)
     val d0 = census.agg(min("day").as("d0"))
     val bins = s.range(1, StreamPsiEdges.length + 2L)
       .select(col("id").as("bin"))
@@ -1282,20 +1177,12 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q336_stream_cusum_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").cast("date").as("d"), col("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val census = s.table(name).localCheckpoint(true)
+    val census = drainToMemory(stream, name, "complete").localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window.orderBy("d")
     val seq = census
       .withColumn("i", row_number().over(w).cast("bigint"))
@@ -1346,20 +1233,12 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q369_stream_acf_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"))
       .agg(count(lit(1)).as("x"))
       .select(col("window.start").cast("date").as("day"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val daily = s.table(name).localCheckpoint(true)
+    val daily = drainToMemory(stream, name, "complete").localCheckpoint(true)
     val g = daily.agg(count(lit(1)).as("n"), sum("x").as("sx"))
     val y = daily.crossJoin(broadcast(g))
       .select(col("day"), (col("n") * col("x") - col("sx")).as("y"))
@@ -1419,8 +1298,7 @@ object EventStream {
       : org.apache.spark.sql.DataFrame = {
     val A = graft.operators.Analytics
     val name = "q388_stream_sprt_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"))
       .agg(count(lit(1)).as("dn"),
@@ -1428,18 +1306,11 @@ object EventStream {
           .as("dk"))
       .select(col("window.start").cast("date").as("day"),
         col("dn"), col("dk"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val w = org.apache.spark.sql.expressions.Window.orderBy("day")
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    s.table(name).localCheckpoint(true)
+    drainToMemory(stream, name, "complete").localCheckpoint(true)
       .withColumn("n", sum("dn").over(w))
       .withColumn("k", sum("dk").over(w))
       .withColumn("llr", expr(s"CAST(k AS DOUBLE) * ${A.sprtL1} " +
@@ -1474,25 +1345,17 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q400_stream_ewma_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"))
       .agg(count(lit(1)).as("x"))
       .select(col("window.start").cast("date").as("day"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val ord = org.apache.spark.sql.expressions.Window.orderBy("day")
     val cum = org.apache.spark.sql.expressions.Window.orderBy("d")
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    s.table(name).localCheckpoint(true)
+    drainToMemory(stream, name, "complete").localCheckpoint(true)
       .withColumn("d", row_number().over(ord).cast("bigint"))
       .withColumn("wt", expr("""CASE WHEN d = 1
         THEN CAST(1 AS BIGINT)
@@ -1528,22 +1391,14 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q412_stream_halving_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(sum(expr("CAST(floor(value * 100) AS BIGINT)")).as("c"))
       .select(col("window.start").cast("date").as("day"),
         col("event_type"), col("c"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val W = org.apache.spark.sql.expressions.Window
-    val daily = s.table(name).localCheckpoint(true)
+    val daily = drainToMemory(stream, name, "complete").localCheckpoint(true)
       .withColumn("d", dense_rank().over(W.orderBy("day"))
         .cast("bigint"))
     val arms = daily.groupBy("event_type")
@@ -1593,8 +1448,7 @@ object EventStream {
       : org.apache.spark.sql.DataFrame = {
     val St = graft.operators.Stats
     val name = "q419_stream_pocock_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"))
       .agg(
@@ -1610,17 +1464,10 @@ object EventStream {
           .as("dkb"))
       .select(col("window.start").cast("date").as("day"),
         col("dna"), col("dka"), col("dnb"), col("dkb"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val W = org.apache.spark.sql.expressions.Window
     val w = W.orderBy("day")
       .rowsBetween(W.unboundedPreceding, W.currentRow)
-    s.table(name).localCheckpoint(true)
+    drainToMemory(stream, name, "complete").localCheckpoint(true)
       .withColumn("na", sum("dna").over(w))
       .withColumn("ka", sum("dka").over(w))
       .withColumn("nb", sum("dnb").over(w))
@@ -1661,24 +1508,17 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.registerAll(s)
     val T = graft.operators.TextOps
     var counts = Seq.empty[(String, String, Long)]
       .toDF("w1", "w2", "c12")
-    val q = readDocs(s, dir, maxFilesPerTrigger).select("text")
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        val bc = T.adjacentBigramsOf(batch.toDF())
-          .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        counts = counts.unionByName(bc)
-          .groupBy("w1", "w2").agg(sum("c12").as("c12"))
-          .localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val input = readDocs(s, dir, maxFilesPerTrigger).select("text")
+    drainEachBatch(input) { batch =>
+      val bc = T.adjacentBigramsOf(batch)
+        .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+      counts = counts.unionByName(bc)
+        .groupBy("w1", "w2").agg(sum("c12").as("c12"))
+        .localCheckpoint(true)
+    }
     T.goodTuringSpectrum(counts)
   }
 
@@ -1715,33 +1555,27 @@ object EventStream {
     import s.implicits._
     var firstB = Seq.empty[(String, Long)].toDF("g", "fb")
     var tokc = Seq.empty[(Long, Long)].toDF("b", "n_toks")
-    val q = readDocs(s, dir, maxFilesPerTrigger).select("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        val toks = batch.toDF()
-          .select(expr(s"doc_id div $GrowthBucketDocs").as("b"),
-            split(col("text"), " ").as("ws"))
-          .localCheckpoint(true)
-        val bf = toks.filter(size(col("ws")) >= 3)
-          .select(col("b"), explode(expr(
-            """transform(sequence(1, size(ws) - 2),
-               i -> concat_ws(' ', element_at(ws, i),
-                 element_at(ws, i + 1), element_at(ws, i + 2)))"""))
-            .as("g"))
-          .groupBy("g").agg(min("b").as("fb"))
-        firstB = firstB.unionByName(bf)
-          .groupBy("g").agg(min("fb").as("fb")).localCheckpoint(true)
-        val bt = toks.groupBy("b")
-          .agg(sum(size(col("ws")).cast("bigint")).as("n_toks"))
-        tokc = tokc.unionByName(bt)
-          .groupBy("b").agg(sum("n_toks").as("n_toks"))
-          .localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val input = readDocs(s, dir, maxFilesPerTrigger).select("doc_id", "text")
+    drainEachBatch(input) { batch =>
+      val toks = batch
+        .select(expr(s"doc_id div $GrowthBucketDocs").as("b"),
+          split(col("text"), " ").as("ws"))
+        .localCheckpoint(true)
+      val bf = toks.filter(size(col("ws")) >= 3)
+        .select(col("b"), explode(expr(
+          """transform(sequence(1, size(ws) - 2),
+             i -> concat_ws(' ', element_at(ws, i),
+               element_at(ws, i + 1), element_at(ws, i + 2)))"""))
+          .as("g"))
+        .groupBy("g").agg(min("b").as("fb"))
+      firstB = firstB.unionByName(bf)
+        .groupBy("g").agg(min("fb").as("fb")).localCheckpoint(true)
+      val bt = toks.groupBy("b")
+        .agg(sum(size(col("ws")).cast("bigint")).as("n_toks"))
+      tokc = tokc.unionByName(bt)
+        .groupBy("b").agg(sum("n_toks").as("n_toks"))
+        .localCheckpoint(true)
+    }
     val w = org.apache.spark.sql.expressions.Window.orderBy("b")
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding,
@@ -1802,20 +1636,12 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q442_stream_periodogram_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"))
       .agg(count(lit(1)).as("x"))
       .select(col("window.start").cast("date").as("day"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val phased = s.table(name).localCheckpoint(true)
+    val phased = drainToMemory(stream, name, "complete").localCheckpoint(true)
       .select(col("x"),
         expr("datediff(day, DATE '2024-01-01') % 7").as("m"))
     val aggs = (1 to 3).flatMap { k => Seq(
@@ -1877,20 +1703,12 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q451_stream_dispersion_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("x"))
       .select(col("event_type"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name).localCheckpoint(true)
+    drainToMemory(stream, name, "complete").localCheckpoint(true)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("x").as("sx"),
         sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"))
@@ -1935,24 +1753,16 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q458_stream_spc_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("x"))
       .select(col("window.start").cast("date").as("day"),
         hour(col("window.start")).as("hr"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // zero-fill the 24-hour spine per observed day: an hour with no
     // events is a real 0-count subgroup member, and at small SFs
     // requiring 24 OBSERVED hours would empty the chart entirely
-    val census = s.table(name).localCheckpoint(true)
+    val census = drainToMemory(stream, name, "complete").localCheckpoint(true)
     val spine = census.select("day").distinct()
       .crossJoin(s.range(24).select(col("id").cast("int").as("hr")))
     val daily = spine.join(census, Seq("day", "hr"), "left")
@@ -2022,20 +1832,12 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q467_stream_user_skew_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"), col("user_id"))
       .agg(count(lit(1)).as("x"))
       .select(col("user_id"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name).localCheckpoint(true)
+    drainToMemory(stream, name, "complete").localCheckpoint(true)
       .groupBy("user_id").agg(sum("x").as("c"))
       .agg(sum("c").as("n"), count(lit(1)).as("ndv"),
         max("c").as("max_cnt"))
@@ -2078,24 +1880,16 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q484_stream_negbin_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("x"))
       .select(col("event_type"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val mean = "(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"
     val vr = """((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
       * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
       / (CAST(n AS DOUBLE) - 1.0))"""
-    s.table(name).localCheckpoint(true)
+    drainToMemory(stream, name, "complete").localCheckpoint(true)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("x").as("sx"),
         sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"))
@@ -2127,18 +1921,10 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q491_stream_coverage_mem"
-    s.catalog.dropTempView(name)
-    val q = readDocs(s, dir, maxFilesPerTrigger)
+    val stream = readDocs(s, dir, maxFilesPerTrigger)
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("c"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val census = s.table(name).localCheckpoint(true)
+    val census = drainToMemory(stream, name, "complete").localCheckpoint(true)
     val langs = census.select("lang").distinct()
     val sources = census.select("source").distinct()
     val spine = langs.crossJoin(sources)
@@ -2175,8 +1961,7 @@ object EventStream {
       : org.apache.spark.sql.DataFrame = {
     import graft.operators.Curation
     val name = "q500_stream_hll_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val stream = readEvents(s, dir, maxFilesPerTrigger)
       .selectExpr("event_type",
         s"(${Curation.HllA} * user_id + ${Curation.HllB}) " +
           s"% ${Curation.HllP} AS hll_h")
@@ -2185,14 +1970,7 @@ object EventStream {
       .withColumn("rho", expr(Curation.hllRhoCase))
       .groupBy("event_type", "hll_reg")
       .agg(max("rho").as("m"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drainToMemory(stream, name, "complete")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_regs"),
         sum(expr("shiftleft(CAST(1 AS BIGINT), 25 - m)")).as("s_occ"))
@@ -2301,27 +2079,19 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q506_stream_profiles_tws_mem"
-    s.catalog.dropTempView(name)
     val confKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = s.conf.getOption(confKey)
     s.conf.set(confKey, RocksDbProvider)
-    try {
-      val q = runningUserActivityTws(
+    val sink = try {
+      val stream = runningUserActivityTws(
         typedEvents(readEvents(s, dir, maxFilesPerTrigger)))
         .toDF()
-        .writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainToMemory(stream, name, "update")
     } finally prev match {
       case Some(v) => s.conf.set(confKey, v)
       case None => s.conf.unset(confKey)
     }
-    s.table(name)
-      .groupBy("user_id")
+    sink.groupBy("user_id")
       .agg(org.apache.spark.sql.functions.max("n_events").as("n_events"),
         org.apache.spark.sql.functions.max("n_purchases")
           .as("n_purchases"))
@@ -2434,27 +2204,19 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val name = "q514_stream_timer_sessions_mem"
-    s.catalog.dropTempView(name)
     val confKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = s.conf.getOption(confKey)
     s.conf.set(confKey, RocksDbProvider)
     try {
-      val q = sessionizeWithTimers(
+      val stream = sessionizeWithTimers(
         typedEvents(readEvents(s, dir, maxFilesPerTrigger)
           .withWatermark("ts", "0 seconds")), SessionGapSeconds)
         .toDF()
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainToMemory(stream, name, "append")
     } finally prev match {
       case Some(v) => s.conf.set(confKey, v)
       case None => s.conf.unset(confKey)
     }
-    s.table(name)
   }
 
   // -------------------------------------------------------------- q517
@@ -2477,17 +2239,9 @@ object EventStream {
       : org.apache.spark.sql.DataFrame = {
     import graft.operators.Curation
     val name = "q517_stream_dsir_ratios_mem"
-    s.catalog.dropTempView(name)
-    val q = Curation.dsirCensus(
+    val stream = Curation.dsirCensus(
         Curation.dsirTokenBuckets(readDocs(s, dir, maxFilesPerTrigger)))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Curation.dsirRatios(s.table(name))
+    Curation.dsirRatios(drainToMemory(stream, name, "complete"))
   }
 
   // -------------------------------------------------------------- q505
@@ -2508,123 +2262,19 @@ object EventStream {
       : org.apache.spark.sql.DataFrame = {
     import graft.operators.Curation
     val name = "q505_stream_split_gain_mem"
-    s.catalog.dropTempView(name)
-    val q = Curation.splitGainStats(readDocs(s, dir, maxFilesPerTrigger))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Curation.splitGainFinish(s.table(name))
+    val stream = Curation.splitGainStats(readDocs(s, dir, maxFilesPerTrigger))
+    Curation.splitGainFinish(drainToMemory(stream, name, "complete"))
   }
 
-  val queries: Map[String, (SparkSession, String)
-      => org.apache.spark.sql.DataFrame] = Map(
-    "q517_stream_dsir_ratios" ->
-      ((s: SparkSession, d: String) => q517StreamDsirRatios(s, d)),
-    "q514_stream_timer_sessions" ->
-      ((s: SparkSession, d: String) => q514StreamTimerSessions(s, d)),
-    "q506_stream_profiles_tws" ->
-      ((s: SparkSession, d: String) => q506StreamProfilesTws(s, d)),
-    "q505_stream_split_gain" ->
-      ((s: SparkSession, d: String) => q505StreamSplitGain(s, d)),
-    "q500_stream_hll" ->
-      ((s: SparkSession, d: String) => q500StreamHll(s, d)),
-    "q491_stream_coverage" ->
-      ((s: SparkSession, d: String) => q491StreamCoverage(s, d)),
-    "q484_stream_negbin" ->
-      ((s: SparkSession, d: String) => q484StreamNegbin(s, d)),
-    "q467_stream_user_skew" ->
-      ((s: SparkSession, d: String) => q467StreamUserSkew(s, d)),
-    "q458_stream_spc" ->
-      ((s: SparkSession, d: String) => q458StreamSpc(s, d)),
-    "q451_stream_dispersion" ->
-      ((s: SparkSession, d: String) => q451StreamDispersion(s, d)),
-    "q442_stream_periodogram" ->
-      ((s: SparkSession, d: String) => q442StreamPeriodogram(s, d)),
-    "q353_stream_vocab_growth" ->
-      ((s: SparkSession, d: String) => q353StreamVocabGrowth(s, d)),
-    "q347_stream_spectrum" ->
-      ((s: SparkSession, d: String) => q347StreamSpectrum(s, d)),
-    "q336_stream_cusum" -> ((s, d) => q336StreamCusum(s, d)),
-    "q369_stream_acf" ->
-      ((s: SparkSession, d: String) => q369StreamAcf(s, d)),
-    "q388_stream_sprt" ->
-      ((s: SparkSession, d: String) => q388StreamSprt(s, d)),
-    "q400_stream_ewma" ->
-      ((s: SparkSession, d: String) => q400StreamEwma(s, d)),
-    "q412_stream_halving" ->
-      ((s: SparkSession, d: String) => q412StreamHalving(s, d)),
-    "q419_stream_pocock" ->
-      ((s: SparkSession, d: String) => q419StreamPocock(s, d)),
-    "q313_stream_psi" -> ((s, d) => q313StreamPsi(s, d)),
-    "q302_stream_chunk_dedup" -> ((s, d) => q302StreamChunkDedup(s, d)),
-    "q283_stream_funnel" -> ((s, d) => q283StreamFunnel(s, d)),
-    "q267_stream_rate_limit" -> ((s, d) => q267StreamRateLimit(s, d)),
-    "q253_stream_quantile" -> ((s, d) => q253StreamQuantile(s, d)),
-    "q239_stream_heavy_hitters" -> ((s, d) => q239StreamHeavyHitters(s, d)),
-    "q236_stream_kmv" -> ((s, d) => q236StreamKmv(s, d)),
-    "q188_stream_session_window" -> ((s, d) => q188StreamSessionWindow(s, d)),
-    "q157_stream_lsh" -> ((s, d) => q157StreamLsh(s, d)),
-    "q146_stream_upsert" -> ((s, d) => q146StreamUpsert(s, d)),
-    "q140_stream_enrich" -> ((s, d) => q140StreamEnrich(s, d)),
-    "q109_stream_windows" -> ((s, d) => q109StreamWindows(s, d)),
-    "q114_stream_profiles" -> ((s, d) => q114StreamProfiles(s, d)),
-    "q117_stream_sessions" -> ((s, d) => q117StreamSessions(s, d)),
-    "q121_stream_interval_join" -> ((s, d) => q121StreamIntervalJoin(s, d)),
-    "q126_stream_dedup" -> ((s, d) => q126StreamDedup(s, d)))
-
-  /** Identical to q26's oracle: the streaming run must land exactly on
-    * the batch aggregation (complete mode over a drained finite replay). */
-  val oracleSql: Map[String, String] = Map(
-    "q500_stream_hll" -> q500OracleSql,
-    "q505_stream_split_gain" -> graft.operators.Curation.q498OracleSql,
-    "q491_stream_coverage" -> graft.operators.Pipeline.q487OracleSql,
-    "q484_stream_negbin" -> graft.operators.Stats.q480OracleSql,
-    "q467_stream_user_skew" -> q467OracleSql,
-    "q458_stream_spc" -> q458OracleSql,
-    "q451_stream_dispersion" -> graft.operators.Stats.q446OracleSql,
-    "q442_stream_periodogram" -> q442OracleSql,
-    "q353_stream_vocab_growth" -> q353OracleSql,
-    "q347_stream_spectrum" -> graft.operators.TextOps.q343OracleSql2,
-    "q336_stream_cusum" -> q336OracleSql,
-    "q369_stream_acf" -> q369OracleSql,
-    "q388_stream_sprt" -> graft.operators.Analytics.q386OracleSql2,
-    "q400_stream_ewma" -> graft.operators.Analytics.q395OracleSql2,
-    "q412_stream_halving" -> graft.operators.Stats.q411OracleSql2,
-    "q419_stream_pocock" -> graft.operators.Stats.q415OracleSql2,
-    "q313_stream_psi" -> q313OracleSql,
-    "q302_stream_chunk_dedup" -> graft.operators.Dedup.q300OracleSql2,
-    "q283_stream_funnel" -> q283OracleSql,
-    "q267_stream_rate_limit" -> q267OracleSql,
-    "q253_stream_quantile" -> q253OracleSql,
-    "q239_stream_heavy_hitters" -> q239OracleSql,
-    "q236_stream_kmv" -> q236OracleSql,
-    "q188_stream_session_window" -> q188OracleSql,
-    "q157_stream_lsh" -> graft.operators.Dedup.q30OracleSql,
-    "q146_stream_upsert" -> q146OracleSql,
-    "q140_stream_enrich" -> q140OracleSql,
-    "q109_stream_windows" ->
-      """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
-         count(*) AS n,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-           AS sum_value
-         FROM events GROUP BY 1, 2""",
-    "q114_stream_profiles" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_purchases
-         FROM events GROUP BY user_id""",
+  val registry: Seq[Q] = Seq(
     // q517 shares q513's CTE prefix, released at the ratio frame
-    "q517_stream_dsir_ratios" ->
-      graft.operators.Curation.q517OracleSql,
+    Q("q517_stream_dsir_ratios", q517StreamDsirRatios(_, _),
+      graft.operators.Curation.q517OracleSql),
     // q514 = q117's sessionization UNION the timer-flushed tails: last
     // sessions whose armed expiry (end_s + gap)·1000 ms sits AT OR
     // below the final watermark (max event ms at 0-second delay) — the
     // pinned INCLUSIVE Spark comparator (ScalePathSpec boundary replay)
-    "q514_stream_timer_sessions" ->
+    Q("q514_stream_timer_sessions", q514StreamTimerSessions(_, _),
       s"""WITH e AS (SELECT user_id,
             epoch_us(ts) // 1000000 AS s,
             epoch_us(ts) // 1000 AS ms FROM events),
@@ -2654,15 +2304,65 @@ object EventStream {
            'timer' AS via
          FROM sess se JOIN last_sess l
            ON se.user_id = l.user_id AND se.sid = l.last_sid, wm
-         WHERE (se.end_s + $SessionGapSeconds) * 1000 <= wm.wm_ms""",
+         WHERE (se.end_s + $SessionGapSeconds) * 1000 <= wm.wm_ms"""),
     // q506 shares q114's oracle verbatim: transformWithState =
     // mapGroupsWithState = batch GROUP BY is the declared contract
-    "q506_stream_profiles_tws" ->
+    Q("q506_stream_profiles_tws", q506StreamProfilesTws(_, _),
       """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
          CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
            AS BIGINT) AS n_purchases
-         FROM events GROUP BY user_id""",
-    "q117_stream_sessions" ->
+         FROM events GROUP BY user_id"""),
+    Q("q505_stream_split_gain", q505StreamSplitGain(_, _),
+      graft.operators.Curation.q498OracleSql),
+    Q("q500_stream_hll", q500StreamHll(_, _), q500OracleSql),
+    Q("q491_stream_coverage", q491StreamCoverage(_, _),
+      graft.operators.Pipeline.q487OracleSql),
+    Q("q484_stream_negbin", q484StreamNegbin(_, _),
+      graft.operators.Stats.q480OracleSql),
+    Q("q467_stream_user_skew", q467StreamUserSkew(_, _), q467OracleSql),
+    Q("q458_stream_spc", q458StreamSpc(_, _), q458OracleSql),
+    Q("q451_stream_dispersion", q451StreamDispersion(_, _),
+      graft.operators.Stats.q446OracleSql),
+    Q("q442_stream_periodogram", q442StreamPeriodogram(_, _), q442OracleSql),
+    Q("q353_stream_vocab_growth", q353StreamVocabGrowth(_, _), q353OracleSql),
+    Q("q347_stream_spectrum", q347StreamSpectrum(_, _),
+      graft.operators.TextOps.q343OracleSql2),
+    Q("q336_stream_cusum", q336StreamCusum(_, _), q336OracleSql),
+    Q("q369_stream_acf", q369StreamAcf(_, _), q369OracleSql),
+    Q("q388_stream_sprt", q388StreamSprt(_, _),
+      graft.operators.Analytics.q386OracleSql2),
+    Q("q400_stream_ewma", q400StreamEwma(_, _),
+      graft.operators.Analytics.q395OracleSql2),
+    Q("q412_stream_halving", q412StreamHalving(_, _),
+      graft.operators.Stats.q411OracleSql2),
+    Q("q419_stream_pocock", q419StreamPocock(_, _),
+      graft.operators.Stats.q415OracleSql2),
+    Q("q313_stream_psi", q313StreamPsi(_, _), q313OracleSql),
+    Q("q302_stream_chunk_dedup", q302StreamChunkDedup(_, _),
+      graft.operators.Dedup.q300OracleSql2),
+    Q("q283_stream_funnel", q283StreamFunnel(_, _), q283OracleSql),
+    Q("q267_stream_rate_limit", q267StreamRateLimit(_, _), q267OracleSql),
+    Q("q253_stream_quantile", q253StreamQuantile(_, _), q253OracleSql),
+    Q("q239_stream_heavy_hitters", q239StreamHeavyHitters(_, _), q239OracleSql),
+    Q("q236_stream_kmv", q236StreamKmv(_, _), q236OracleSql),
+    Q("q188_stream_session_window", q188StreamSessionWindow(_, _),
+      q188OracleSql),
+    Q("q157_stream_lsh", q157StreamLsh(_, _),
+      graft.operators.Dedup.q30OracleSql),
+    Q("q146_stream_upsert", q146StreamUpsert(_, _), q146OracleSql),
+    Q("q140_stream_enrich", q140StreamEnrich(_, _), q140OracleSql),
+    Q("q109_stream_windows", q109StreamWindows(_, _),
+      """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
+         count(*) AS n,
+         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
+           AS sum_value
+         FROM events GROUP BY 1, 2"""),
+    Q("q114_stream_profiles", q114StreamProfiles(_, _),
+      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+           AS BIGINT) AS n_purchases
+         FROM events GROUP BY user_id"""),
+    Q("q117_stream_sessions", q117StreamSessions(_, _),
       s"""WITH e AS (SELECT user_id,
             epoch_us(ts) // 1000000 AS s FROM events),
          x AS (SELECT user_id, s,
@@ -2683,8 +2383,8 @@ object EventStream {
            FROM sess GROUP BY user_id)
          SELECT se.user_id, se.start_s, se.end_s, se.n_events
          FROM sess se JOIN last_sess l
-           ON se.user_id = l.user_id AND se.sid < l.last_sid""",
-    "q121_stream_interval_join" ->
+           ON se.user_id = l.user_id AND se.sid < l.last_sid"""),
+    Q("q121_stream_interval_join", q121StreamIntervalJoin(_, _),
       s"""WITH e AS (SELECT event_id, user_id, event_type,
             epoch_ns(ts) // 1000 AS us FROM events
           WHERE event_type IN ('click', 'purchase')),
@@ -2695,9 +2395,9 @@ object EventStream {
           SELECT c.click_id, p.purchase_id,
                  CAST(p.pus - c.cus AS BIGINT) AS gap_us
           FROM c JOIN p ON c.user_id = p.user_id
-            AND p.pus >= c.cus AND p.pus <= c.cus + $AttributionUs""",
-    "q126_stream_dedup" ->
-      """SELECT event_id, user_id, event_type FROM events""")
+            AND p.pus >= c.cus AND p.pus <= c.cus + $AttributionUs"""),
+    Q("q126_stream_dedup", q126StreamDedup(_, _),
+      """SELECT event_id, user_id, event_type FROM events"""))
 
   /** Start the windowed aggregation into an in-memory sink (complete mode:
     * every window stays queryable — right for tests; production would use

@@ -2,14 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** Edge inputs for the native expressions: empty strings/arrays, short
   * arrays, nulls — the cases a 100 TB corpus WILL contain somewhere. */
 class ExpressionEdgeSpec extends SparkSpec {
 
   private def one(sqlExpr: String): org.apache.spark.sql.Row = {
-    GraftFunctions.registerAll(spark)
     spark.range(1).selectExpr(sqlExpr + " AS v").head()
   }
 
@@ -46,7 +43,6 @@ class ExpressionEdgeSpec extends SparkSpec {
   }
 
   test("winnow_keys matches the HOF formulation on random hash arrays") {
-    GraftFunctions.registerAll(spark)
     val pb = 1048576L
     val w = 4
     val rnd = new scala.util.Random(42)
@@ -89,7 +85,6 @@ class ExpressionEdgeSpec extends SparkSpec {
   }
 
   test("sum_squares over an empty relation returns the zero buffer") {
-    GraftFunctions.registerAll(spark)
     val r = spark.range(0).selectExpr("sum_squares(id) AS s").head()
     assert(r.getLong(0) === 0L)
   }
@@ -178,7 +173,6 @@ class ExpressionEdgeSpec extends SparkSpec {
   }
 
   test("gram_strings equals the transform+concat_ws lambda form") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val texts = Seq("a b c d e", "x y", "lone", "", "p q r").toDF("t")
       .selectExpr("split(t, ' ') AS ws")
@@ -203,7 +197,6 @@ class ExpressionEdgeSpec extends SparkSpec {
   }
 
   test("adjacent_pairs equals the transform+struct lambda form") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val texts = Seq("a b c d", "x y", "lone", "").toDF("t")
       .selectExpr("split(t, ' ') AS ws")
@@ -220,5 +213,47 @@ class ExpressionEdgeSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     assert(native === hof) // native emits nothing for short rows
     assert(one("adjacent_pairs(CAST(NULL AS ARRAY<STRING>))").isNullAt(0))
+  }
+
+  test("adjacent_pairs turns null tokens into null pair fields, " +
+    "interpreted and codegen'd") {
+    def pairs(r: org.apache.spark.sql.Row): Seq[(String, String)] =
+      r.getSeq[org.apache.spark.sql.Row](0)
+        .map(p => (p.getString(0), p.getString(1)))
+    val want = Seq(("a", null), (null, "b"))
+    // a literal array is constant-folded: the interpreted eval path
+    assert(pairs(one("adjacent_pairs(array('a', CAST(NULL AS STRING), 'b'))"))
+      === want)
+    // a per-row array runs inside whole-stage codegen
+    val prev = spark.conf.get("spark.sql.codegen.factoryMode")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    try {
+      val got = spark.range(2).selectExpr(
+          "adjacent_pairs(CASE WHEN id = 0 " +
+            "THEN array('a', CAST(NULL AS STRING), 'b') " +
+            "ELSE array(CAST(NULL AS STRING)) END) AS v")
+        .orderBy(size(col("v")).desc).collect()
+      assert(pairs(got(0)) === want && pairs(got(1)).isEmpty)
+      assert(got(0).schema("v").dataType.asInstanceOf[
+        org.apache.spark.sql.types.ArrayType].elementType.asInstanceOf[
+        org.apache.spark.sql.types.StructType].forall(_.nullable))
+    } finally spark.conf.set("spark.sql.codegen.factoryMode", prev)
+  }
+
+  test("constant-argument builders reject a non-foldable or null " +
+    "argument at analysis time") {
+    val df = spark.range(3).selectExpr(
+      "array(id) AS h", "array(CAST(id AS STRING)) AS ws",
+      "CAST(id AS INT) + 2 AS k")
+    for (call <- Seq("minhash_k(h, k)", "shingle_hashes(ws, k)",
+        "gram_strings(ws, k)", "winnow_keys(h, k, 7)",
+        "winnow_keys(h, 2, k)", "minhash_k(h, CAST(NULL AS INT))")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.selectExpr(call))
+      assert(e.getCondition === "NON_FOLDABLE_ARGUMENT", call)
+    }
+    // a literal argument still builds
+    assert(df.selectExpr("minhash_k(h, 4) AS m").head()
+      .getSeq[Long](0).length === 4)
   }
 }

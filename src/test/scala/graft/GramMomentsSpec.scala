@@ -16,7 +16,6 @@ class GramMomentsSpec extends SparkSpec {
   /** The milli-grid vectors q315 feeds the aggregate (exercises
     * negative values too). */
   private def vecs = {
-    graft.functions.GraftFunctions.registerAll(spark)
     Tables.load(spark, sf1, "embeddings")
       .withColumn("mv", expr(
         "transform(CAST(embedding AS ARRAY<DOUBLE>), " +
@@ -66,12 +65,11 @@ class GramMomentsSpec extends SparkSpec {
   test("q351's in-row matvec round equals the d-row join form") {
     // one round of the single-row power iteration vs the explicit
     // sym-frame join+groupBy recurrence it replaced, on real data
-    val row = graft.operators.Similarity.queries("q351_power_iteration")
+    val row = SparkEntry.queries("q351_power_iteration")
       .apply(spark, sf1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // reference round-by-round on the dense sym frame (old formulation)
-    val gram = graft.operators.Similarity
-      .queries("q154_gram_matrix").apply(spark, sf1)
+    val gram = SparkEntry.queries("q154_gram_matrix").apply(spark, sf1)
     val sym = gram.unionByName(gram
       .filter(col("i") =!= col("j"))
       .select(col("j").as("i"), col("i").as("j"), col("g")))
@@ -97,7 +95,6 @@ class GramMomentsSpec extends SparkSpec {
   }
 
   test("hand-computed d=3 fixture pins the buffer layout exactly") {
-    graft.functions.GraftFunctions.registerAll(spark)
     import spark.implicits._
     // three vectors, negative values included; one NULL vector row
     // (skipped by the aggregate, like the element_at form it replaced)
@@ -120,7 +117,6 @@ class GramMomentsSpec extends SparkSpec {
   }
 
   test("a vector shorter than the declared width fails loudly") {
-    graft.functions.GraftFunctions.registerAll(spark)
     import spark.implicits._
     val df = Seq(Seq(1L, 2L)).toDF("mv")
     val e = intercept[Exception] {

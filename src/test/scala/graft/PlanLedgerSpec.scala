@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * change: `sbt "runMain graft.PlanLedger"`, review the git diff of
   * plans_ledger.json (that diff IS the plan review), commit both.
   *
-  * Runs in its own AQE-off session (PlanLedger.session) — separate from
+  * Runs in its own AQE-off session (PlanLedger's conf) — separate from
   * TestSpark's shared AQE-on session — because the ledger is defined
   * against static plans. Planning-only: nothing here executes beyond
   * the construction-time jobs some iterative queries run at sf0.001.

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * artifacts that go stale silently when a query lands without
   * regenerating them, and a stale index is worse than none — it tells
   * the next maintainer the key doesn't exist. The spec re-derives the
-  * key sets from the registration maps themselves (the single source of
-  * truth the artifacts are generated FROM), so drift fails by name. */
+  * key sets from the query registry itself (the single source of truth
+  * the artifacts are generated FROM), so drift fails by name. */
 class QueriesIndexSpec extends AnyFunSuite {
 
   private def fileKeys(path: String, pattern: String): Set[String] = {
@@ -52,11 +52,5 @@ class QueriesIndexSpec extends AnyFunSuite {
     val stale = ledger -- declared
     assert(stale.isEmpty,
       s"ledger keys with no declared query: ${stale.toSeq.sorted.take(10)}")
-  }
-
-  test("every declared key has an oracle (or a documented rows-only " +
-    "exemption — currently none)") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(noOracle.isEmpty, s"missing oracles: ${noOracle.toSeq.sorted}")
   }
 }

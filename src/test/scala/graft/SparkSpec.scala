@@ -18,6 +18,9 @@ object TestSpark {
         .createTempDirectory("graft-test-warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // specs call operator functions directly, outside SparkEntry.queries'
+    // per-query registration
+    graft.functions.GraftFunctions.registerAll(s)
     s
   }
   val sf1: String = "/root/testdata/sf0.001"

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Generate QUERIES.md — the declared-query index (round-10 verdict #9).
 
-Parses the per-file registration maps (`"qKEY" -> (method _)`) that
-`SparkEntry.queries` concatenates, resolves each key to its `def` site
+Parses the per-file query registries (`Q("qKEY", method, oracle)`) that
+`SparkEntry.registry` concatenates, resolves each key to its `def` site
 (file:line) and its scaladoc headline (`/** qNNN — TITLE (rationale...`),
 and emits one table row per key, grouped by operator family. The
 committed output is CI-checked by QueriesIndexSpec: the spec fails when
@@ -30,8 +30,7 @@ FILES = [
     ("src/main/scala/graft/streaming/EventStream.scala", "Streaming"),
 ]
 
-REG = re.compile(r'"(q\w+)"\s*->\s*\((\w+) _\)')
-REG_LAMBDA = re.compile(r'"(q\w+)"\s*->\s*\(\(')
+REG = re.compile(r'\bQ\("(q\w+)",')
 DOC = re.compile(r'/\*\*\s*(q\d+)(?:\'s)?\s+—\s+(.+)')
 
 
@@ -89,14 +88,7 @@ def main():
                 if qnum not in docs or docs[qnum][1] is None:
                     docs[qnum] = (headline(buf) + flag, defline)
         for i, ln in enumerate(lines):
-            m = REG.search(ln) or REG_LAMBDA.search(ln)
-            if not m:
-                # registration wrapped onto the next line:
-                # `"qKEY" ->` \n `  (method _)` — join and retry
-                tail = re.search(r'"(q\w+)"\s*->\s*$', ln)
-                if tail and i + 1 < len(lines):
-                    joined = ln + " " + lines[i + 1].strip()
-                    m = REG.search(joined) or REG_LAMBDA.search(joined)
+            m = REG.search(ln)
             if not m:
                 continue
             key = m.group(1)
@@ -116,9 +108,9 @@ def main():
            f"{len(rows)} declared queries (generated by "
            "`tools/gen_queries_md.py`; CI-checked against "
            "`SparkEntry.queries` by QueriesIndexSpec — regenerate after "
-           "adding a query). Each key has a `queries` entry, an "
-           "`oracleSql` DuckDB differential, and a BASELINE.md bench "
-           "entry (`baseline_queries.json`).",
+           "adding a query). Each key is one `Q(name, run, oracle)` "
+           "registry entry — a Spark body and its DuckDB differential — "
+           "and has a BASELINE.md bench entry (`baseline_queries.json`).",
            ""]
     for path, family in FILES:
         fam_rows = sorted((k for k, v in rows.items() if v[0] == family),
